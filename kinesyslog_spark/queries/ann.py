@@ -27,16 +27,13 @@ from pyspark.sql.window import Window as W
 
 from kinesyslog_spark.env import env_budget
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import hot_vectors, load_table, persist_now
+from kinesyslog_spark.tables import artifact, hot_vectors, load_table
 
 EMB_DIM = 64
 BUCKET_BITS = 4
 N_PROBES = 10
 TOP_K = 5
 NEARDUP_COS = 0.4
-
-_IVF_CACHE: dict[tuple[int, str], DataFrame] = {}
-
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hot_vectors(spark, sf_dir).select("vec_id", "label", "emb")
@@ -172,16 +169,15 @@ def _q35_oracle(nprobe: int = 1) -> str:
 
 
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized IVF coarse-centroid table — an IVF index is a
-    persisted structure in any vector store (built once at ingest, probed
-    by every query), so the build cost is paid once per session, not per
-    query. Coarse centroids = per-list (label) dimension means."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    cent = _IVF_CACHE.get(key)
-    if cent is None:
-        e = _emb(spark, sf_dir)
-        cent = persist_now(
-            e.select("label", F.posexplode("emb").alias("pos", "v"))
+    """Session artifact: the IVF coarse-centroid table — an IVF index is
+    a persisted structure in any vector store (built once at ingest,
+    probed by every query), so the build cost is paid once per session,
+    not per query. Coarse centroids = per-list (label) dimension means."""
+
+    def build(keep):
+        return (
+            _emb(spark, sf_dir)
+            .select("label", F.posexplode("emb").alias("pos", "v"))
             .groupBy("label", "pos")
             .agg(F.avg("v").alias("m"))
             .groupBy("label")
@@ -191,8 +187,8 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("cvec")
             )
         )
-        _IVF_CACHE[key] = cent
-    return cent
+
+    return artifact(spark, sf_dir, "ivf_centroids", build)
 
 
 def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
@@ -432,7 +428,9 @@ def _q38_block_pairs_arrow(it):
     qcol = tbl.column("q")
     qc = qcol.chunk(0) if isinstance(qcol, pa.ChunkedArray) else qcol
     d = len(qc[0])
-    q = np.asarray(qc.values).reshape(n, d)
+    # flatten() honours the list array's offsets; .values would read
+    # the child buffer from 0 and misalign every vector of a sliced batch
+    q = np.asarray(qc.flatten()).reshape(n, d)
     order = np.lexsort((role, bj, bi))
     bi, bj, role, vid, n2 = (
         bi[order], bj[order], role[order], vid[order], n2[order]
@@ -463,36 +461,41 @@ def _q38_block_pairs_arrow(it):
 
 @query("q38_embedding_neardup", oracle=_q38_oracle())
 def q38_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda v: F.floor(v * _Q38_CQ).cast("long"),
-    )
-    base = persist_now(
-        emb.select(
-            "vec_id",
-            q.alias("q"),
-        ).withColumn(
-            "n2",
-            F.aggregate("q", F.lit(0).cast("long"), lambda a, x: a + x * x),
+    def build(keep):
+        emb = load_table(spark, sf_dir, "embeddings")
+        q = F.transform(
+            F.col("embedding").cast("array<double>"),
+            lambda v: F.floor(v * _Q38_CQ).cast("long"),
         )
-    )
-    n_vec = base.count()  # cached frame: a cheap metadata-ish action
-    if GEMM_MAX_PAIRS and n_vec * (n_vec - 1) // 2 > GEMM_MAX_PAIRS:
-        from kinesyslog_spark.queries.resolution import (
-            CandidateBudgetExceeded,
+        base = keep(
+            emb.select(
+                "vec_id",
+                q.alias("q"),
+            ).withColumn(
+                "n2",
+                F.aggregate("q", F.lit(0).cast("long"), lambda a, x: a + x * x),
+            )
         )
+        n_vec = base.count()  # cached frame: a cheap metadata-ish action
+        if GEMM_MAX_PAIRS and n_vec * (n_vec - 1) // 2 > GEMM_MAX_PAIRS:
+            # the registry unpersists base on this abort path
+            from kinesyslog_spark.queries.resolution import (
+                CandidateBudgetExceeded,
+            )
 
-        base.unpersist()  # abort path: leave no stale cached blocks
-        raise CandidateBudgetExceeded(
-            f"q38 exact GEMM would compute "
-            f"~{n_vec * (n_vec - 1) // 2:,} pair dots over {n_vec:,} "
-            f"vectors (budget {GEMM_MAX_PAIRS:,}). An exhaustive exact "
-            "cos>=0.4 join is infeasible at corpus scale no matter the "
-            "blocking — use the ANN scale paths (q29_lsh_bucket_nn / "
-            "q35_ann_ivf_topk / q47_ann_recall) or raise "
-            "SPARK_GRAFT_GEMM_MAX_PAIRS."
-        )
+            raise CandidateBudgetExceeded(
+                f"q38 exact GEMM would compute "
+                f"~{n_vec * (n_vec - 1) // 2:,} pair dots over {n_vec:,} "
+                f"vectors (budget {GEMM_MAX_PAIRS:,}). An exhaustive exact "
+                "cos>=0.4 join is infeasible at corpus scale no matter the "
+                "blocking — use the ANN scale paths (q29_lsh_bucket_nn / "
+                "q35_ann_ivf_topk / q47_ann_recall) or raise "
+                "SPARK_GRAFT_GEMM_MAX_PAIRS."
+            )
+        return base, n_vec
+
+    base, n_vec = artifact(spark, sf_dir, "q38_quantized", build,
+                           knobs=(GEMM_MAX_PAIRS,))
     nb = max(1, -(-n_vec // _Q38_BLOCK))
     blk = F.pmod(F.hash("vec_id"), F.lit(nb)).cast("int")
     tagged = base.withColumn("blk", blk)
@@ -607,8 +610,6 @@ QUANT_BITS_MAX = 127
     """,
 )
 def q46_quantize_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesyslog_spark.tables import persist_now
-
     emb = _emb(spark, sf_dir)
     # Map-only int8 quantization; persisted because probes + corpus side +
     # both rankings read it.
@@ -622,12 +623,13 @@ def q46_quantize_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda a, x: a + x,
         ).cast("double")
     )
-    q = persist_now(
-        emb.select(
+    q = artifact(
+        spark, sf_dir, "q46_quantized",
+        lambda keep: emb.select(
             "vec_id",
             "emb",
             F.transform("emb", lambda x: F.round(x * scale, 0).cast("int")).alias("q"),
-        ).select("vec_id", "emb", "q", qn.alias("qn"))
+        ).select("vec_id", "emb", "q", qn.alias("qn")),
     )
 
     def topk(df: DataFrame, score, alias: str) -> DataFrame:

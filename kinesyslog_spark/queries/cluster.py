@@ -21,11 +21,17 @@ from pyspark.sql.window import Window as W
 
 from kinesyslog_spark.queries import query
 from kinesyslog_spark.queries.dedup import _minhash_oracle, hot_minhash_pairs
+from kinesyslog_spark.tables import artifact
 
 MAX_ROUNDS = 20
 
 
-def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> DataFrame:
+def _local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    return df.localCheckpoint(eager)
+
+
+def connected_components(edges: DataFrame, keep=None,
+                         max_rounds: int = MAX_ROUNDS) -> DataFrame:
     """Connected components over an undirected edge list (src, dst) via
     min-label propagation + pointer jumping.
 
@@ -47,8 +53,11 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> Data
     standard failure mode of iterative algorithms on Spark, and the
     reason GraphX/MLlib checkpoint. On a cluster with an HDFS-backed
     checkpoint dir, `checkpoint()` gives the same truncation with
-    executor-loss tolerance.
+    executor-loss tolerance. With `keep` (an artifact build's callback)
+    the checkpoints belong to that artifact and are freed with it;
+    without, the ContextCleaner reclaims them once unreferenced.
     """
+    ckpt = keep.checkpoint if keep is not None else _local_checkpoint
     both = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # Eager localCheckpoint rather than persist: the loop below runs
     # ~2 executions per round against `both`, and with a plain persist
@@ -59,16 +68,13 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> Data
     # governance refine). Checkpointing collapses the loop's input to a
     # flat scan so per-round planning cost is O(round), not
     # O(caller plan); a 1 GiB-driver vanilla session OOM'd building
-    # those tree strings before this (OPTIMIZATION_r12). Blocks are
-    # reclaimed by the ContextCleaner when the loop's frames are
-    # dropped, same as the per-round checkpoints below.
-    both = both.localCheckpoint()
+    # those tree strings before this (OPTIMIZATION_r12).
+    both = ckpt(both)
     # Round-0 propagation fused into init: l(v) = min(v, min neighbor) —
     # one groupBy instead of a distinct + a full propagation round.
-    labels = (
+    labels = ckpt(
         both.groupBy(F.col("src").alias("node"))
         .agg(F.least(F.first("src"), F.min("dst")).alias("component"))
-        .localCheckpoint()
     )
     # Convergence check: labels only ever decrease (min-propagation), so
     # the label table changed iff sum(component) dropped — one aggregate
@@ -97,13 +103,13 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> Data
         lookup = propagated.select(
             F.col("node").alias("l_node"), F.col("component").alias("l_comp")
         )
-        labels = (
+        labels = ckpt(
             propagated.join(lookup, propagated["component"] == lookup["l_node"], "left")
             .select(
                 "node",
                 F.coalesce("l_comp", "component").alias("component"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         if r % 2 == 1 or r == max_rounds - 1:
             new_sum = labels.agg(F.sum("component")).collect()[0][0]
@@ -138,47 +144,36 @@ def _q40_oracle() -> str:
     """
 
 
-_CLUSTER_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized (doc_id, cluster_id, cluster_size) — the shared
+    """Session artifact (doc_id, cluster_id, cluster_size) — the shared
     artifact of the dedup-clustering family (q40's report, q107's
     survivor resolution, the pipeline's drop-set). A dedup service keeps
     exactly this materialized; released by tables.release_hot."""
     # Keyed on the same budget knobs as hot_minhash_pairs: the labels
-    # are a pure function of the pair graph, and the pair memo rebuilds
-    # when a cap is re-tuned mid-session — without the knobs here,
-    # q40/q107/q165 would keep returning labels computed from pairs
-    # built under the OLD budget (round-12 ADVICE).
+    # are a pure function of the pair graph, and the pair artifact
+    # rebuilds when a cap is re-tuned mid-session — without the knobs
+    # here, q40/q107/q165 would keep returning labels computed from
+    # pairs built under the OLD budget (round-12 ADVICE).
     from kinesyslog_spark.queries.dedup import LSH_MAX_BUCKET, LSH_MAX_SLOTS
 
-    key = (id(spark), sf_dir.rstrip("/"), LSH_MAX_BUCKET, LSH_MAX_SLOTS)
-    got = _CLUSTER_CACHE.get(key)
-    if got is not None:
-        return got
-    # The pair graph is the persisted MinHash-family artifact (shared
-    # with q26/q163/q172/q173/q177): `edges` is read in both union
-    # directions, which would otherwise run q26's candidate + verify
-    # joins twice — and a private copy here would rebuild a frame the
-    # session already holds.
-    pairs = hot_minhash_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    labels = connected_components(edges)
-    out = (
-        labels.select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
-        .withColumn(
-            "cluster_size",
-            F.count("*").over(W.partitionBy("cluster_id")).cast("long"),
+    def build(keep):
+        # The pair graph is the MinHash-family artifact (shared with
+        # q26/q163/q172/q173/q177): `edges` is read in both union
+        # directions, which would otherwise run q26's candidate +
+        # verify joins twice.
+        pairs = hot_minhash_pairs(spark, sf_dir)
+        edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        return (
+            connected_components(edges, keep)
+            .select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
+            .withColumn(
+                "cluster_size",
+                F.count("*").over(W.partitionBy("cluster_id")).cast("long"),
+            )
         )
-        .persist()
-    )
-    out.count()
-    # pairs is the shared session artifact — tables.release_hot owns its
-    # lifetime; unpersisting it here would evict it under its other
-    # consumers.
-    _CLUSTER_CACHE[key] = out
-    return out
+
+    return artifact(spark, sf_dir, "cluster_labels", build,
+                    knobs=(LSH_MAX_BUCKET, LSH_MAX_SLOTS))
 
 
 @query("q40_dedup_clusters", oracle=_q40_oracle())

@@ -62,7 +62,7 @@ from kinesyslog_spark.queries.dedup import (
     _par,
     hot_shingle_sigs,
 )
-from kinesyslog_spark.tables import hot_tokens, persist_now
+from kinesyslog_spark.tables import artifact, hot_tokens
 
 LM_K = 0.5  # add-k smoothing constant
 
@@ -109,8 +109,9 @@ def _q95_oracle() -> str:
 @query("q95_bigram_logprob", oracle=_q95_oracle())
 def q95_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = hot_tokens(spark, sf_dir)
-    bi = persist_now(
-        toks.filter(F.size("toks") >= 2)
+    bi = artifact(
+        spark, sf_dir, "q95_bigrams",
+        lambda keep: toks.filter(F.size("toks") >= 2)
         .select(
             "doc_id",
             F.explode(

@@ -49,7 +49,7 @@ from kinesyslog_spark.operators.text import (
     word_shingles,
 )
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import hot_table, hot_tokens, persist_now
+from kinesyslog_spark.tables import artifact, hot_table, hot_tokens
 
 MINHASH_K = 12
 LSH_BANDS = 4
@@ -313,72 +313,37 @@ LSH_MAX_SLOTS: int | None = env_budget(
 )
 
 
-_SIG_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
-_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def hot_shingles(spark, sf_dir: str) -> DataFrame:
-    """Session-memoized (doc_id, sh) word-3-gram shingle sets — the
+    """Session artifact (doc_id, sh): word-3-gram shingle sets — the
     corpus shingle pass shared by the MinHash family (hot_shingle_sigs)
     AND the prefix-filter joins (resolution.hot_shingle_rank). One
-    accessor instead of hot_shingle_rank peeking at _SIG_CACHE: either
-    family may run first and the other reuses the same persisted frame
-    (round-12 ADVICE — the peek only checked at build time, so a
-    prefix-join-first session persisted a duplicate corpus shingle
-    pass). Released by tables.release_hot."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _SHINGLE_CACHE.get(key)
-    if got is not None:
-        return got
-    sig = _SIG_CACHE.get(key)
-    if sig is not None:
-        # the full (sh, sigs) artifact is already resident (e.g. loaded
-        # from the opt-in disk store): alias its sh, don't rebuild
-        _SHINGLE_CACHE[key] = sig[0]
-        return sig[0]
-    from kinesyslog_spark.tables import HOT_LEVEL
+    entry whichever family runs first, and a stored one (disk load)
+    lands in the same entry, so the corpus shingles are resident once."""
 
-    sh = (
-        hot_tokens(spark, sf_dir)
-        .filter(F.size("toks") >= 3)
-        .select("doc_id", word_shingles(F.col("toks"), 3).alias("sh"))
-        .persist(HOT_LEVEL)
-    )
-    _SHINGLE_CACHE[key] = sh
-    return sh
+    def build(keep):
+        return (
+            hot_tokens(spark, sf_dir)
+            .filter(F.size("toks") >= 3)
+            .select("doc_id", word_shingles(F.col("toks"), 3).alias("sh")),
+        )
+
+    return artifact(spark, sf_dir, "shingles", build,
+                    knobs=(MINHASH_ARTIFACT_V, 3), store=True)[0]
 
 
 def hot_shingle_sigs(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Session-memoized (shingles, minhash signatures) over `documents` —
+    """Session artifacts (shingles, minhash signatures) over `documents` —
     the shared artifact of the whole MinHash family (q26 self-dedup, q96
     incremental dedup; a dedup service keeps exactly these materialized).
     Returns (sh: (doc_id, sh), sigs: (doc_id, mh0..mhK-1)), both
     persisted; released by `tables.release_hot`."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _SIG_CACHE.get(key)
-    if got is not None:
-        return got
-    apath = family_artifact_path(
-        sf_dir, "minhash",
-        f"v{MINHASH_ARTIFACT_V}|k={MINHASH_K}|shingle=3",
-    )
-    if apath is not None:
-        loaded = family_artifact_load(spark, apath, ["sh", "sigs"])
-        if loaded is not None:
-            _SIG_CACHE[key] = loaded
-            _SHINGLE_CACHE.setdefault(key, loaded[0])
-            return loaded
-    from kinesyslog_spark.tables import HOT_LEVEL
-
-    # shared corpus shingle pass (also serves hot_shingle_rank)
     sh = hot_shingles(spark, sf_dir)
-    sigs = minhash_df(sh, ["doc_id"], "sh", MINHASH_K).persist(HOT_LEVEL)
-    sigs.count()
-    if apath is not None:
-        family_artifact_write({"sh": sh, "sigs": sigs}, apath)
-    got = (sh, sigs)
-    _SIG_CACHE[key] = got
-    return got
+    sigs = artifact(
+        spark, sf_dir, "minhash_sigs",
+        lambda keep: (minhash_df(sh, ["doc_id"], "sh", MINHASH_K),),
+        knobs=(MINHASH_ARTIFACT_V, MINHASH_K, 3), store=True,
+    )[0]
+    return sh, sigs
 
 
 def _par(df: DataFrame) -> int:
@@ -458,17 +423,6 @@ def lsh_slot_estimate(keyed: DataFrame, key_cols: list[str],
     return int(row["adm"] or 0), int(row["cap"] or 0)
 
 
-# Session memo for the slot estimates: the estimate is a pure function
-# of (corpus, blocking scheme, cap), and the signature frames it reads
-# are themselves session-memoized — re-running the aggregate on every
-# query call measured ~1 s at sf0.1 (a 12% headline hit on q26).
-# Keyed by (spark id, BLOCKING FAMILY, caller-supplied corpus key, cap,
-# rows dial) — family, not caller name, so q26/q163 (identical minhash
-# bands frame) share one estimate per corpus. Cleared by
-# tables.release_hot alongside the DataFrame memos.
-_SLOT_EST_CACHE: dict[tuple, tuple[int, int]] = {}
-
-
 def _lsh_slot_budget_check(name: str, keyed: DataFrame, key_cols: list[str],
                            max_bucket: int | None, side=None,
                            cache_key=None, family: str | None = None,
@@ -491,18 +445,21 @@ def _lsh_slot_budget_check(name: str, keyed: DataFrame, key_cols: list[str],
         return (-1, -1)  # disabled: nothing measured
     from kinesyslog_spark.queries.resolution import CandidateBudgetExceeded
 
-    memo = (
-        (id(keyed.sparkSession), family or name, cache_key, max_bucket,
-         NGRAM_ROWS)
-        if cache_key is not None else None
+    def estimate(keep):
+        return lsh_slot_estimate(keyed, key_cols, max_bucket, side=side,
+                                 unique_ids=unique_ids)
+
+    # The estimate is a pure function of (corpus, blocking family, cap)
+    # and reads a session artifact; re-running the aggregate on every
+    # query call measured ~1 s at sf0.1 (a 12% headline hit on q26). So
+    # a caller naming its corpus (cache_key) gets a session artifact
+    # per blocking FAMILY, not caller: q26/q163 (identical minhash
+    # bands frame) share one estimate.
+    adm, cap = (
+        artifact(keyed.sparkSession, cache_key, f"slots:{family or name}",
+                 estimate, knobs=(max_bucket,))
+        if cache_key is not None else estimate(None)
     )
-    got = _SLOT_EST_CACHE.get(memo) if memo else None
-    if got is None:
-        got = lsh_slot_estimate(keyed, key_cols, max_bucket, side=side,
-                                unique_ids=unique_ids)
-        if memo:
-            _SLOT_EST_CACHE[memo] = got
-    adm, cap = got
     if adm > LSH_MAX_SLOTS:
         raise CandidateBudgetExceeded(
             f"{name} band-bucket expansion would emit ~{adm:,} candidate "
@@ -660,45 +617,39 @@ def _minhash_oracle() -> str:
     """
 
 
-_MH_PAIR_CACHE: dict[tuple, DataFrame] = {}
-
-
 def hot_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized, persisted verified MinHash pair graph — the
+    """Session artifact: the verified MinHash pair graph — the
     MinHash-family artifact (the hot_simhash_pairs / hot_image_pairs
     pattern). Six consumers (q26's report, q40/q107 via cluster_labels,
     q163's leakage count, q172's recall audit, q173's threshold sweep,
     q177's provenance rollup) each re-derived the band + candidate +
     verify plan per call; one persisted build per session serves them
     all, and the candidate expansion + exact-Jaccard verify run once.
-    Released by tables.release_hot. Keyed on the effective budget knobs
-    (the _SLOT_EST_CACHE pattern) so a re-tuned cap rebuilds instead of
-    returning pairs computed under the old guard."""
-    key = (id(spark), sf_dir.rstrip("/"), LSH_MAX_BUCKET, LSH_MAX_SLOTS)
-    got = _MH_PAIR_CACHE.get(key)
-    if got is None:
-        # Shingles + signatures come from the session-memoized family
-        # cache (hot_shingle_sigs): the shingling (interpreted,
-        # HOF-heavy) and the explode+MIN signature aggregation run once
-        # per session and are shared with q96's incremental dedup.
+    Keyed on the effective budget knobs so a re-tuned cap rebuilds
+    instead of returning pairs computed under the old guard."""
+
+    def build(keep):
+        # Shingles + signatures are the family's session artifacts
+        # (hot_shingle_sigs): the shingling (interpreted, HOF-heavy)
+        # and the explode+MIN signature aggregation run once per
+        # session and are shared with q96's incremental dedup.
         sh, sigs = hot_shingle_sigs(spark, sf_dir)
         # bands is read TWICE in the build (slot-budget estimate +
-        # member aggregate): persist the skinny (doc_id, band_idx,
+        # member aggregate): keep the skinny (doc_id, band_idx,
         # band_key) frame for the two passes instead of re-running the
-        # band-key md5 explode, and drop it once the pairs are
-        # materialized (guide §5: persist only what >=2 consumers read,
-        # for exactly as long as they read it). unique_ids=True: sigs is
-        # one row per doc and the explode emits distinct band_idx
-        # values, so the bucket-size aggregate can run COUNT(*) in ONE
-        # shuffle instead of COUNT(DISTINCT doc_id)'s two.
-        from kinesyslog_spark.tables import HOT_LEVEL
-
-        bands = sigs.select(
+        # band-key md5 explode; the registry drops it once the pairs
+        # are materialized, or when the budget check raises (guide §5:
+        # persist only what >=2 consumers read, for exactly as long as
+        # they read it). unique_ids=True: sigs is one row per doc and
+        # the explode emits distinct band_idx values, so the
+        # bucket-size aggregate can run COUNT(*) in ONE shuffle instead
+        # of COUNT(DISTINCT doc_id)'s two.
+        bands = keep(sigs.select(
             "doc_id",
             F.explode(
                 lsh_band_keys([f"mh{i}" for i in range(MINHASH_K)], LSH_BANDS, LSH_ROWS)
             ).alias("bd"),
-        ).select("doc_id", "bd.band_idx", "bd.band_key").persist(HOT_LEVEL)
+        ).select("doc_id", "bd.band_idx", "bd.band_key"))
         cand = _pair_candidates(bands, ["band_idx", "band_key"],
                                 name="q26_minhash_lsh",
                                 budget_cache_key=sf_dir.rstrip("/"),
@@ -706,14 +657,10 @@ def hot_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 unique_ids=True)
         # Unordered build: every consumer either persists (here), joins,
         # or re-aggregates — q26 alone re-sorts its 0(pairs) report.
-        try:
-            got = persist_now(
-                _verify_jaccard(cand, sh, JACCARD_THR, ordered=False)
-            )
-        finally:
-            bands.unpersist()  # build-only; dead weight once pairs exist
-        _MH_PAIR_CACHE[key] = got
-    return got
+        return _verify_jaccard(cand, sh, JACCARD_THR, ordered=False)
+
+    return artifact(spark, sf_dir, "minhash_pairs", build,
+                    knobs=(LSH_MAX_BUCKET, LSH_MAX_SLOTS))
 
 
 @query("q26_minhash_lsh", oracle=_minhash_oracle())
@@ -833,105 +780,11 @@ SIMHASH_ARTIFACT_V = 1  # bump when fingerprint/snake/tokenize changes
 MINHASH_ARTIFACT_V = 1  # bump when shingle/signature/tokenize changes
 
 
-def family_artifact_path(sf_dir: str, family: str,
-                         scheme: str) -> str | None:
-    """Disk location of a corpus-keyed hot-family artifact, or None
-    when artifact persistence is disabled (the default).
-
-    The hot family frames (SimHash (grp, blk), MinHash (sh, sigs)) are
-    pure functions of the corpus and the scheme constants, and building
-    them is the dominant cost of a FRESH session's first family query
-    (q27 sf10: ~100 s of the 160 s fresh run; q26 sf1: ~15 s of
-    17.7 s). Like a production IVF index, a deployment can keep them on
-    disk keyed by corpus — a fresh session then pays parquet IO, not
-    recompute. The key folds in the documents.parquet file stat
-    (size + mtime), so a regenerated dataset at the same path misses
-    cleanly, and the family's scheme version + dial constants, so a
-    code change never reads a stale layout.
-
-    OPT-IN ONLY (OPTIMIZATION_r12): persistence requires an explicit
-    SPARK_GRAFT_ARTIFACT_DIR path. A default-on disk store would carry
-    computed intermediates across independent engine invocations, which
-    makes a fresh-session benchmark silently *not fresh* — every bench
-    or correctness run must compute from the parquet inputs alone. The
-    feature stays available for long-lived deployments that want an
-    index; measurement paths never set the variable."""
-    import hashlib
-    import os
-
-    base = (os.environ.get("SPARK_GRAFT_ARTIFACT_DIR") or "").strip()
-    if not base or base in ("0", "off", "none"):
-        return None
-    doc = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(doc)
-    except OSError:
-        return None
-    key = hashlib.sha1(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}|{scheme}"
-        .encode()
-    ).hexdigest()[:16]
-    return os.path.join(base, family, key)
-
-
-def family_artifact_load(
-    spark: SparkSession, path: str, names: list[str]
-) -> tuple[DataFrame, ...] | None:
-    """Load the named frames from a PUBLISHED artifact dir, persisted
-    at the hot level (last frame materialized); None if absent."""
-    import os
-
-    from kinesyslog_spark.tables import HOT_LEVEL
-
-    if not os.path.exists(os.path.join(path, "_PUBLISHED")):
-        return None
-    frames = tuple(
-        spark.read.parquet(os.path.join(path, n)).persist(HOT_LEVEL)
-        for n in names
-    )
-    frames[-1].count()
-    return frames
-
-
-def family_artifact_write(
-    frames: dict[str, DataFrame], path: str
-) -> None:
-    """Best-effort atomic publish: write into a tmp dir, rename into
-    place, marker last. A concurrent writer losing the rename race just
-    discards its tmp; readers only trust _PUBLISHED."""
-    import os
-    import shutil
-
-    tmp = f"{path}.tmp-{os.getpid()}"
-    try:
-        for n, df in frames.items():
-            df.write.mode("overwrite").parquet(os.path.join(tmp, n))
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        os.rename(tmp, path)
-        with open(os.path.join(path, "_PUBLISHED"), "w") as f:
-            f.write("1\n")
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _simhash_artifact_path(sf_dir: str) -> str | None:
-    return family_artifact_path(
-        sf_dir, "simhash",
-        f"v{SIMHASH_ARTIFACT_V}|bits={SIMHASH_BITS}"
-        f"|blocks={SIMHASH_SNAKE_BLOCKS}|clean={SIMHASH_COMBO_CLEAN}",
-    )
-
-
-def _simhash_artifact_load(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame] | None:
-    return family_artifact_load(spark, path, ["grp", "blk"])
-
-
-def _simhash_artifact_write(
-    grp: DataFrame, blk: DataFrame, path: str
-) -> None:
-    family_artifact_write({"grp": grp, "blk": blk}, path)
+def _simhash_knobs() -> tuple:
+    """Everything the SimHash family artifact depends on besides the
+    corpus: its artifact knobs and its disk-store scheme."""
+    return (SIMHASH_ARTIFACT_V, SIMHASH_BITS, SIMHASH_SNAKE_BLOCKS,
+            SIMHASH_COMBO_CLEAN)
 
 
 def hot_simhash_groups(
@@ -939,7 +792,8 @@ def hot_simhash_groups(
 ) -> tuple[DataFrame, DataFrame]:
     """Session-memoized SimHash family artifacts — the q26-style
     hot_shingle_sigs contract for the SimHash side. Returns
-    (grp, blk), both persisted; released by `tables.release_hot`.
+    (grp, blk), both persisted; released by `tables.release_hot`;
+    stored on disk when SPARK_GRAFT_ARTIFACT_DIR is set.
 
     grp: one row per DISTINCT fingerprint — (fp, rep = min doc_id,
     members sorted array, hi/lo int halves). The distinct-fp collapse:
@@ -957,43 +811,29 @@ def hot_simhash_groups(
     pure long arithmetic (the first cut concatenated bit STRINGS per
     combo, inlining ~8k substring nodes into one codegen method —
     4.7 s of compile at sf0.1)."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _SIMHASH_CACHE.get(key)
-    if got is not None:
-        return got
-    apath = _simhash_artifact_path(sf_dir)
-    if apath is not None:
-        loaded = _simhash_artifact_load(spark, apath)
-        if loaded is not None:
-            _SIMHASH_CACHE[key] = loaded
-            return loaded
-    from kinesyslog_spark.tables import HOT_LEVEL
 
-    toks = hot_tokens(spark, sf_dir).filter(F.size("toks") >= 1)
-    hi, lo = fp_halves(F.col("fp"))
-    grp = (
-        simhash_df(toks, ["doc_id"], "toks")
-        .groupBy("fp")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.array_sort(F.collect_list("doc_id")).alias("members"),
+    def build(keep):
+        toks = hot_tokens(spark, sf_dir).filter(F.size("toks") >= 1)
+        hi, lo = fp_halves(F.col("fp"))
+        # kept: the snake assignment below aggregates over grp, then
+        # blk derives from it
+        grp = keep(
+            simhash_df(toks, ["doc_id"], "toks")
+            .groupBy("fp")
+            .agg(
+                F.min("doc_id").alias("rep"),
+                F.array_sort(F.collect_list("doc_id")).alias("members"),
+            )
+            .select("fp", "rep", "members", hi.alias("hi"), lo.alias("lo"))
         )
-        .select("fp", "rep", "members", hi.alias("hi"), lo.alias("lo"))
-        .persist(HOT_LEVEL)
-    )
-    blk = grp.select(
-        F.col("rep").alias("doc_id"), "hi", "lo",
-        F.array(*_block_int_cols(snake_blocks_for(grp))).alias("ba"),
-    ).persist(HOT_LEVEL)
-    blk.count()
-    if apath is not None:
-        _simhash_artifact_write(grp, blk, apath)
-    got = (grp, blk)
-    _SIMHASH_CACHE[key] = got
-    return got
+        blk = grp.select(
+            F.col("rep").alias("doc_id"), "hi", "lo",
+            F.array(*_block_int_cols(snake_blocks_for(grp))).alias("ba"),
+        )
+        return grp, blk
 
-
-_SIMHASH_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
+    return artifact(spark, sf_dir, "simhash_groups", build,
+                    knobs=_simhash_knobs(), store=True)
 
 
 @query("q27_simhash_pairs", oracle=_simhash_oracle())
@@ -1138,14 +978,17 @@ def _ngram_oracle() -> str:
 
 def ngram_candidates_frame(
     docs: DataFrame,
+    keep,
     rows: int | None = None,
     name: str = "ngram_candidates",
     budget_cache_key=None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Engine-API form of q28's blocking over an ARBITRARY
     (doc_id, text) frame: returns (cand, base, rows_used) where cand =
-    distinct (doc_a < doc_b) candidate pairs and base = persisted
-    (doc_id, n, sh).
+    distinct (doc_a < doc_b) candidate pairs and base = (doc_id, n, sh),
+    both persisted through `keep` (an artifact build's callback, or
+    tables.scratch() for a one-shot caller), which also owns the
+    signature frame the expansion reads.
 
     rows=None derives the LSH rows dial from the MATERIALIZED
     signature count via auto_ngram_rows — the graph.py pattern of
@@ -1170,7 +1013,7 @@ def ngram_candidates_frame(
     # Persisted: feeds both verify-join sides (5-gram shingles — the
     # declared similarity measure) AND, when rows is underived, the
     # count that picks the dial.
-    base = persist_now(
+    base = keep(
         docs.select(
             "doc_id",
             F.length("text").alias("n"),
@@ -1181,7 +1024,7 @@ def ngram_candidates_frame(
         rows = auto_ngram_rows(base.count())
     # Blocking signatures run over the LONGER 9-gram shingles (see the
     # NGRAM_BLOCK_N note): same minhash machinery, different gram size.
-    keyed = persist_now(
+    keyed = keep(
         minhash_df(
             docs.select(
                 "doc_id",
@@ -1211,40 +1054,22 @@ def ngram_candidates_frame(
             F.explode(F.array(F.col("b0"), F.col("b0") + 1)).alias("bucket"),
         )
     )
-    try:
-        # the memo tuple carries the global NGRAM_ROWS, not the local
-        # dial — fold the actual rows into the corpus key so derived-
-        # rows callers can never share an entry across dials
-        memo_key = (
-            (budget_cache_key, rows)
-            if budget_cache_key is not None else None
-        )
-        # unique_ids=True: one keyed row per (doc, n) and the explode
-        # emits distinct (t, bucket) per doc, so bucket size is a plain
-        # COUNT(*) — one shuffle instead of COUNT(DISTINCT doc_id)'s two
-        # in the slot estimate (the q27 combo-frame lesson: 28 -> 8 s
-        # at sf1).
-        cand = persist_now(
-            _pair_candidates(blocked, ["t", "bk", "bucket"],
-                             name=name,
-                             budget_cache_key=memo_key,
-                             budget_family="ngram_bands",
-                             unique_ids=True)
-        )
-    except Exception:
-        # abort path must not leak the persisted frames
-        base.unpersist()
-        keyed.unpersist()
-        raise
-    # keyed feeds ONLY the candidate expansion; with cand materialized
-    # its blocks are dead weight — and it was in no memo/release
-    # registry, so each rebuild after release_hot leaked another
-    # persisted copy (round-12 ADVICE).
-    keyed.unpersist()
+    # unique_ids=True: one keyed row per (doc, n) and the explode emits
+    # distinct (t, bucket) per doc, so bucket size is a plain COUNT(*) —
+    # one shuffle instead of COUNT(DISTINCT doc_id)'s two in the slot
+    # estimate (the q27 combo-frame lesson: 28 -> 8 s at sf1). The
+    # estimate's family carries the actual rows dial, so derived-rows
+    # callers never share an estimate across dials. keyed feeds ONLY
+    # the expansion: its owner drops it once cand is live, or on the
+    # budget abort.
+    cand = keep(
+        _pair_candidates(blocked, ["t", "bk", "bucket"],
+                         name=name,
+                         budget_cache_key=budget_cache_key,
+                         budget_family=f"ngram_bands:rows={rows}",
+                         unique_ids=True)
+    )
     return cand, base, rows
-
-
-_NGRAM_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
 def ngram_candidates(
@@ -1254,28 +1079,22 @@ def ngram_candidates(
     `documents` table at the oracle-lockstep NGRAM_ROWS dial. Shared
     with q117's edit-distance verify.
 
-    Session-memoized (cand persisted, base already persisted by the
-    frame builder): every q28/q117 call previously re-ran the whole
-    shingle + signature + expansion build AND left the superseded
-    persisted copies behind — a fresh candidate build per bench run
-    where one per session suffices. Keyed on the budget knobs (the
-    hot_minhash_pairs pattern); released by tables.release_hot."""
-    key = (id(spark), sf_dir.rstrip("/"), NGRAM_ROWS,
-           LSH_MAX_BUCKET, LSH_MAX_SLOTS)
-    got = _NGRAM_CACHE.get(key)
-    if got is None:
-        # cand arrives persisted+materialized by the frame builder
-        # (which drops its internal `keyed` signature frame once cand
-        # is live — the round-12 ADVICE leak).
+    Session artifact (cand, base): every q28/q117 call previously
+    re-ran the whole shingle + signature + expansion build — a fresh
+    candidate build per bench run where one per session suffices.
+    Keyed on the budget knobs (the hot_minhash_pairs pattern)."""
+
+    def build(keep):
         cand, base, _rows = ngram_candidates_frame(
-            hot_table(spark, sf_dir, "documents"),
+            hot_table(spark, sf_dir, "documents"), keep,
             rows=NGRAM_ROWS,
             name="q28_ngram_jaccard",
             budget_cache_key=sf_dir.rstrip("/"),
         )
-        got = (cand, base)
-        _NGRAM_CACHE[key] = got
-    return got
+        return cand, base
+
+    return artifact(spark, sf_dir, "ngram_candidates", build,
+                    knobs=(NGRAM_ROWS, LSH_MAX_BUCKET, LSH_MAX_SLOTS))
 
 
 @query("q28_ngram_jaccard", oracle=_ngram_oracle())

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from kinesyslog_spark.operators.text import TOKEN_RE, md5_int60, word_shingles
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import hot_table, hot_tokens, persist_now
+from kinesyslog_spark.tables import artifact, hot_table, hot_tokens
 
 DSIR_B = 512  # hashed feature buckets
 DSIR_K = 0.5  # add-k smoothing
@@ -171,7 +171,8 @@ def score_feature_buckets(
 def q103_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = hot_tokens(spark, sf_dir)
     docs = hot_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    fb = persist_now(doc_feature_buckets(toks).join(docs, "doc_id"))
+    fb = artifact(spark, sf_dir, "q103_feature_buckets",
+                  lambda keep: doc_feature_buckets(toks).join(docs, "doc_id"))
     lam = build_dsir_model(
         fb.select("bucket", (F.col("lang") == DSIR_TARGET_LANG).alias("is_target"))
     )
@@ -213,12 +214,13 @@ def _q104_oracle() -> str:
 @query("q104_ngram_novelty", oracle=_q104_oracle())
 def q104_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = hot_tokens(spark, sf_dir)
-    grams = persist_now(
-        toks.filter(F.size("toks") >= NOVELTY_N)
+    grams = artifact(
+        spark, sf_dir, "q104_grams",
+        lambda keep: toks.filter(F.size("toks") >= NOVELTY_N)
         .select(
             "doc_id",
             F.explode(word_shingles(F.col("toks"), NOVELTY_N)).alias("g"),
-        )
+        ),
     )
     train = (
         grams.filter(F.col("doc_id") % NOVELTY_TEST_MOD != 0)

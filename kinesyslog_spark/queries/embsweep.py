@@ -28,7 +28,7 @@ from pyspark.sql.window import Window as W
 
 from kinesyslog_spark.queries import query
 from kinesyslog_spark.queries.ann import EMB_DIM, N_PROBES, TOP_K, _emb
-from kinesyslog_spark.tables import persist_now
+from kinesyslog_spark.tables import artifact
 
 TRUNC_DIMS = (8, 16, 32)
 
@@ -84,7 +84,8 @@ def _q179_oracle() -> str:
 
 @query("q179_matryoshka_recall", oracle=_q179_oracle())
 def q179_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = persist_now(_emb(spark, sf_dir).select("vec_id", "emb"))
+    base = artifact(spark, sf_dir, "q179_vectors",
+                    lambda keep: _emb(spark, sf_dir).select("vec_id", "emb"))
     probes = base.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("pid"), F.col("emb").alias("pemb")
     )
@@ -110,7 +111,8 @@ def q179_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("pid", "vec_id")
         )
 
-    full = persist_now(topk(EMB_DIM))
+    full = artifact(spark, sf_dir, "q179_full_topk",
+                    lambda keep: topk(EMB_DIM))
     arms = []
     for d in TRUNC_DIMS:
         hit = topk(d).select("pid", "vec_id", F.lit(1).alias("_h"))

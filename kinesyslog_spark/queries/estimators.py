@@ -191,78 +191,78 @@ def q135_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (double throughout; cum/pick comparisons are exact — counts are
     # far below 2^53), so est_q is bit-identical to the broadcast-join
     # form and the oracle twin still hash-matches.
-    from pyspark import StorageLevel
+    from kinesyslog_spark.tables import scratch
 
-    v = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_extendedprice").alias("x")
-    ).persist(StorageLevel.MEMORY_ONLY)
-    mrow = v.agg(
-        F.min("x").alias("lo"), F.max("x").alias("hi"), F.count("*").alias("n")
-    ).collect()[0]
-    lo_v, hi_v, n = float(mrow["lo"]), float(mrow["hi"]), int(mrow["n"])
-    lo, hi = F.lit(lo_v), F.lit(hi_v)
-    hist_rows = (
-        v.groupBy(
-            F.least(
-                F.floor((F.col("x") - lo) / (hi - lo) * N_BUCKETS),
-                F.lit(N_BUCKETS - 1).cast("long"),
-            ).alias("bkt")
-        )
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )
-    # cum / cum_prev / pick on the driver: integer running sums over the
-    # <=N_BUCKETS-row histogram; `cum >= p * n` in Python is the same
-    # IEEE double product and exact integer comparison as the former
-    # broadcast-join predicate.
-    by_bkt = sorted((int(r["bkt"]), int(r["c"])) for r in hist_rows)
-    cum_of: dict[int, tuple[int, int]] = {}
-    run = 0
-    for bkt, c in by_bkt:
-        run += c
-        cum_of[bkt] = (c, run - c)  # (c, cum_prev)
-    pick_rows = []
-    for p in Q_PROBS:
-        bkt = min(b for b, c in by_bkt if cum_of[b][0] + cum_of[b][1] >= p * n)
-        c, cum_prev = cum_of[bkt]
-        pick_rows.append((p, bkt, c, cum_prev))
-    est = local_frame(
-        spark, pick_rows, "p double, bkt long, c long, cum_prev long"
-    ).select(
-        "p",
-        (
-            lo
-            + (hi - lo)
-            * (
-                F.col("bkt")
-                + (F.col("p") * F.lit(n) - F.col("cum_prev")) / F.col("c")
+    with scratch() as keep:
+        v = keep(_t(spark, sf_dir, "lineitem").select(
+            F.col("l_extendedprice").alias("x")
+        ))
+        mrow = v.agg(
+            F.min("x").alias("lo"), F.max("x").alias("hi"), F.count("*").alias("n")
+        ).collect()[0]
+        lo_v, hi_v, n = float(mrow["lo"]), float(mrow["hi"]), int(mrow["n"])
+        lo, hi = F.lit(lo_v), F.lit(hi_v)
+        hist_rows = (
+            v.groupBy(
+                F.least(
+                    F.floor((F.col("x") - lo) / (hi - lo) * N_BUCKETS),
+                    F.lit(N_BUCKETS - 1).cast("long"),
+                ).alias("bkt")
             )
-            / N_BUCKETS
-        ).alias("est_q"),
-    )
-    # Exact-verify arm: histogram-selection rank lookup
-    # (operators/ranking.py exact_rank_values) — the first cut ranked
-    # the WHOLE corpus with with_global_rank (sampling pass + full
-    # range exchange + per-bucket sorts) to read back six rows; the
-    # rewrite needs only bucket-count aggregates over the pruned x
-    # column, so nothing corpus-sized ever shuffles. The interpolation
-    # arithmetic is unchanged (decimal(12,2) -> double is exact here),
-    # so the oracle twin still hash-matches.
-    import math
+            .agg(F.count("*").alias("c"))
+            .collect()
+        )
+        # cum / cum_prev / pick on the driver: integer running sums over the
+        # <=N_BUCKETS-row histogram; `cum >= p * n` in Python is the same
+        # IEEE double product and exact integer comparison as the former
+        # broadcast-join predicate.
+        by_bkt = sorted((int(r["bkt"]), int(r["c"])) for r in hist_rows)
+        cum_of: dict[int, tuple[int, int]] = {}
+        run = 0
+        for bkt, c in by_bkt:
+            run += c
+            cum_of[bkt] = (c, run - c)  # (c, cum_prev)
+        pick_rows = []
+        for p in Q_PROBS:
+            bkt = min(b for b, c in by_bkt if cum_of[b][0] + cum_of[b][1] >= p * n)
+            c, cum_prev = cum_of[bkt]
+            pick_rows.append((p, bkt, c, cum_prev))
+        est = local_frame(
+            spark, pick_rows, "p double, bkt long, c long, cum_prev long"
+        ).select(
+            "p",
+            (
+                lo
+                + (hi - lo)
+                * (
+                    F.col("bkt")
+                    + (F.col("p") * F.lit(n) - F.col("cum_prev")) / F.col("c")
+                )
+                / N_BUCKETS
+            ).alias("est_q"),
+        )
+        # Exact-verify arm: histogram-selection rank lookup
+        # (operators/ranking.py exact_rank_values) — the first cut ranked
+        # the WHOLE corpus with with_global_rank (sampling pass + full
+        # range exchange + per-bucket sorts) to read back six rows; the
+        # rewrite needs only bucket-count aggregates over the pruned x
+        # column, so nothing corpus-sized ever shuffles. The interpolation
+        # arithmetic is unchanged (decimal(12,2) -> double is exact here),
+        # so the oracle twin still hash-matches.
+        import math
 
-    rank_of: dict[int, float] = {}
-    pk_rows = []
-    for p in Q_PROBS:
-        k = math.floor(p * (n - 1))
-        rlo, rhi = k + 1, min(k + 2, n)
-        pk_rows.append((p, rlo, rhi, p * (n - 1) - k))
-        rank_of[rlo] = rank_of[rhi] = 0.0
-    ranks = sorted(rank_of)
-    got = exact_rank_values(
-        v, "x", ranks, bounds=(lo_v, hi_v), total=n
-    )
-    rank_of = dict(zip(ranks, got))
-    v.unpersist()
+        rank_of: dict[int, float] = {}
+        pk_rows = []
+        for p in Q_PROBS:
+            k = math.floor(p * (n - 1))
+            rlo, rhi = k + 1, min(k + 2, n)
+            pk_rows.append((p, rlo, rhi, p * (n - 1) - k))
+            rank_of[rlo] = rank_of[rhi] = 0.0
+        ranks = sorted(rank_of)
+        got = exact_rank_values(
+            v, "x", ranks, bounds=(lo_v, hi_v), total=n
+        )
+        rank_of = dict(zip(ranks, got))
     exact = local_frame(
         spark,
         [

@@ -125,7 +125,7 @@ ORDER BY c.split
 
 @query("q169_split_disciplined_auc", oracle=_Q169_ORACLE)
 def q169_split_disciplined_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
+    from kinesyslog_spark.tables import artifact
 
     # Train/score passes derive from the postings artifact (the q157
     # pattern): instance sums == SUM(tf * ...) over (doc, token) rows.
@@ -169,49 +169,52 @@ def q169_split_disciplined_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("decimal(12,6)").alias("p")
         )
     )
-    scores = (
-        tok.join(F.broadcast(model), tok.token == model.w)
-        .groupBy("doc_id")
-        .agg(
-            F.min("y").alias("y"),
-            F.sum(F.col("tf") * (F.col("le") - F.col("lo")))
-            .cast("decimal(20,6)")
-            .alias("s0"),
+    def build(keep):
+        scores = keep(
+            tok.join(F.broadcast(model), tok.token == model.w)
+            .groupBy("doc_id")
+            .agg(
+                F.min("y").alias("y"),
+                F.sum(F.col("tf") * (F.col("le") - F.col("lo")))
+                .cast("decimal(20,6)")
+                .alias("s0"),
+            )
+            .crossJoin(F.broadcast(pri))
+            .select("doc_id", "y", (F.col("s0") + F.col("p")).alias("score"))
         )
-        .crossJoin(F.broadcast(pri))
-        .select("doc_id", "y", (F.col("s0") + F.col("p")).alias("score"))
-        .persist(StorageLevel.MEMORY_ONLY)
-    )
-    mm = scores.agg(F.min("score").alias("lo"), F.max("score").alias("hi"))
-    b = (
-        scores.join(sp, "doc_id")
-        .crossJoin(F.broadcast(mm))
-        .select(
-            "split", "y",
-            F.least(
-                F.floor(
-                    (F.col("score") - F.col("lo"))
-                    / (F.col("hi") - F.col("lo"))
-                    * AUC_BINS
-                ).cast("long"),
-                F.lit(AUC_BINS - 1).cast("long"),
-            ).alias("bkt"),
+        mm = scores.agg(F.min("score").alias("lo"), F.max("score").alias("hi"))
+        b = (
+            scores.join(sp, "doc_id")
+            .crossJoin(F.broadcast(mm))
+            .select(
+                "split", "y",
+                F.least(
+                    F.floor(
+                        (F.col("score") - F.col("lo"))
+                        / (F.col("hi") - F.col("lo"))
+                        * AUC_BINS
+                    ).cast("long"),
+                    F.lit(AUC_BINS - 1).cast("long"),
+                ).alias("bkt"),
+            )
         )
-    )
-    # localCheckpoint the <=3*AUC_BINS-row histogram and compute all
-    # three splits in ONE split-keyed cumulative pass (the shape the
-    # oracle already uses) instead of three per-split
-    # auc_from_histogram arms — the arms rebuilt the tiny frame per
-    # split and tripled every exchange (round-6 verdict #4 measured 46
-    # exchanges; scheduler cost, not data cost).
-    h = (
-        b.groupBy("split", "bkt")
-        .agg(
-            F.sum("y").cast("long").alias("pos_b"),
-            F.sum(1 - F.col("y")).cast("long").alias("neg_b"),
+        # localCheckpoint the <=3*AUC_BINS-row histogram (a session
+        # artifact; all the result reads, so `scores` goes with the
+        # build) and compute all
+        # three splits in ONE split-keyed cumulative pass (the shape the
+        # oracle already uses) instead of three per-split
+        # auc_from_histogram arms — the arms rebuilt the tiny frame per
+        # split and tripled every exchange (round-6 verdict #4 measured 46
+        # exchanges; scheduler cost, not data cost).
+        return keep.checkpoint(
+            b.groupBy("split", "bkt")
+            .agg(
+                F.sum("y").cast("long").alias("pos_b"),
+                F.sum(1 - F.col("y")).cast("long").alias("neg_b"),
+            )
         )
-        .localCheckpoint()
-    )
+
+    h = artifact(spark, sf_dir, "q169_histogram", build)
     o = h.select(
         F.col("split").alias("osplit"),
         F.col("bkt").alias("obkt"),

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesyslog_spark.queries import ORACLE, query
-from kinesyslog_spark.queries.cluster import connected_components
+from kinesyslog_spark.queries.cluster import _local_checkpoint, connected_components
 from kinesyslog_spark.queries.imageresolve import (
     hot_image_components,
     hot_image_pairs,
@@ -60,11 +60,12 @@ from kinesyslog_spark.queries.simresolve import (
     hot_simhash_components,
     hot_simhash_pairs,
 )
-from kinesyslog_spark.tables import persist_now
+from kinesyslog_spark.tables import artifact
 
 
 def refine_star_assignments(pairs: DataFrame,
-                            comp: DataFrame | None = None) -> DataFrame:
+                            comp: DataFrame | None = None,
+                            keep=None) -> DataFrame:
     """Star-verified cluster assignments over a near-dup pair frame
     (doc_a, doc_b[, ...]) with doc_a < doc_b and exact-recall edges.
 
@@ -76,7 +77,10 @@ def refine_star_assignments(pairs: DataFrame,
 
     `comp` (node, component) supplies precomputed closure labels — the
     registered queries pass the session-memoized hot_*_components so
-    one CC run feeds the closure rollup and the refinement."""
+    one CC run feeds the closure rollup and the refinement. `keep` (an
+    artifact build's callback) owns the checkpoints, as in
+    connected_components."""
+    ckpt = keep.checkpoint if keep is not None else _local_checkpoint
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
@@ -89,20 +93,20 @@ def refine_star_assignments(pairs: DataFrame,
     # checkpointing collapses it to a flat scan (guide §5: truncate
     # very large plans). This is what made q183's analysis take 136 s
     # and OOM a 1 GiB-driver vanilla session (OPTIMIZATION_r12).
-    adj = edges.unionByName(
+    adj = ckpt(edges.unionByName(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
     ).select(
         F.col("src").alias("node"), F.col("dst").alias("nbr")
-    ).localCheckpoint()
+    ))
     # CC output is already materialized (localCheckpoint by the loop's
     # convergence action, or the caller's persisted hot frame) — no
     # extra persist (the default-heap vanilla session is the budget
     # here; q183 OOM'd a 1g driver when every intermediate was
     # persisted on top of 180 queries' session state)
     if comp is None:
-        comp = connected_components(edges)
+        comp = connected_components(edges, keep)
     comp = comp.select("node", F.col("component").alias("orig_cluster_id"))
     # stage 1: member stays iff it IS the min or is directly adjacent
     # to it (left-semi on the adjacency — edge-scale, never quadratic)
@@ -121,9 +125,9 @@ def refine_star_assignments(pairs: DataFrame,
     # evicted feeds four consumers (edges2 twice, kept2, singles) and
     # its tree nests comp + adj + kept1 — checkpoint for the same
     # flat-plan reason as adj.
-    evicted = comp.join(
+    evicted = ckpt(comp.join(
         kept1.select(F.col("doc_id").alias("node")), "node", "left_anti"
-    ).localCheckpoint()
+    ))
     # stage 2: CC over the evicted-induced subgraph, star-verify again
     ev_nodes = evicted.select("node")
     edges2 = (
@@ -131,7 +135,7 @@ def refine_star_assignments(pairs: DataFrame,
         .join(ev_nodes.withColumnRenamed("node", "dst"), "dst", "left_semi")
         .select("src", "dst")
     )
-    comp2 = connected_components(edges2).select(
+    comp2 = connected_components(edges2, keep).select(
         "node", F.col("component").alias("cluster_id")
     )
     is_min2 = F.col("node") == F.col("cluster_id")
@@ -162,41 +166,31 @@ def refine_star_assignments(pairs: DataFrame,
             F.lit(0).cast("int").alias("stage"),
         )
     )
-    # materialize the (node-scale, narrow) assignment; the two CC
-    # loops' checkpoint blocks and the adjacency/evicted checkpoints
-    # become garbage once nothing references their lineage (reclaimed
-    # by the ContextCleaner)
-    return persist_now(kept1.unionByName(kept2).unionByName(singles))
-
-
-# Session memo for the star-verify assignment frame, keyed
-# (spark id, sf_dir, family): q183 and q185 both need the simhash
-# refinement, and before this memo EACH ran the full pipeline (two CC
-# loops + the star joins) per session — one shared run halves the
-# family's build cost, exactly like hot_simhash_components upstream.
-# Released by tables.release_hot.
-_REFINE_CACHE: dict[tuple, DataFrame] = {}
+    # the two CC loops' checkpoint blocks and the adjacency/evicted
+    # checkpoints become garbage once nothing references their lineage
+    # (reclaimed by the ContextCleaner); the registered form persists
+    # the (node-scale, narrow) assignment (hot_refined_assignments)
+    return kept1.unionByName(kept2).unionByName(singles)
 
 
 def hot_refined_assignments(spark: SparkSession, sf_dir: str,
                             family: str) -> DataFrame:
-    """Session-memoized refine_star_assignments over a registered pair
+    """Session artifact: refine_star_assignments over a registered pair
     family ('simhash' or 'image'), sharing one refinement run across
-    q183/q185 (sim) and q184 (image)."""
-    key = (id(spark), sf_dir.rstrip("/"), family)
-    got = _REFINE_CACHE.get(key)
-    if got is None:
-        if family == "simhash":
-            pairs = hot_simhash_pairs(spark, sf_dir)
-            comp = hot_simhash_components(spark, sf_dir)
-        elif family == "image":
-            pairs = hot_image_pairs(spark, sf_dir)
-            comp = hot_image_components(spark, sf_dir)
-        else:
-            raise KeyError(f"unknown refine family {family!r}")
-        got = refine_star_assignments(pairs, comp)
-        _REFINE_CACHE[key] = got
-    return got
+    q183/q185 (sim) and q184 (image) — before, EACH ran the full
+    pipeline (two CC loops + the star joins) per session."""
+    if family == "simhash":
+        pairs, comp = hot_simhash_pairs, hot_simhash_components
+    elif family == "image":
+        pairs, comp = hot_image_pairs, hot_image_components
+    else:
+        raise KeyError(f"unknown refine family {family!r}")
+    return artifact(
+        spark, sf_dir, f"refined_{family}",
+        lambda keep: refine_star_assignments(
+            pairs(spark, sf_dir), comp(spark, sf_dir), keep
+        ),
+    )
 
 
 def survivor_rollup(asg: DataFrame) -> DataFrame:

@@ -26,9 +26,8 @@ corners (map-side-combined into per-node counts).
 
 Scale notes: the (node -> sorted out-neighbors) adjacency table carries
 exactly E array cells; the broadcast hint is applied ONLY when a real
-edge count (the same count that materializes the persisted
-oriented-edge frame — persist_counted — so literally zero extra
-actions) says it fits under _ADJ_BROADCAST_MAX_EDGES —
+edge count (one count over the persisted oriented-edge frame) says it
+fits under _ADJ_BROADCAST_MAX_EDGES —
 past that the two adjacency joins genuinely run as E-keyed shuffle
 joins, never a wedge-count-sized exchange. (A mandatory F.broadcast
 would NOT fall back — it fails the job past the broadcast limit — so
@@ -55,7 +54,7 @@ from pyspark.sql import functions as F
 
 from kinesyslog_spark.queries import query
 from kinesyslog_spark.queries.relational import _t
-from kinesyslog_spark.tables import persist_counted, persist_now
+from kinesyslog_spark.tables import artifact
 
 TRI_TOPK = 20
 
@@ -113,53 +112,54 @@ def _lex_lt(d1, n1, d2, n2):
     return (d1 < d2) | ((d1 == d2) & (n1 < n2))
 
 
-# Session memo for the oriented-edge/adjacency build: eo and adj are
-# pure functions of the corpus, yet every q140 call re-ran the lineitem
-# self-join + degree orientation AND leaked a fresh persisted copy of
-# items/edges/deg (never unpersisted — the heavy battery's 3 runs held
-# 9 superseded frames). One build per session: the per-call cost
-# becomes the triangle enumeration itself (the declared computation).
-# items/edges/deg are build-only intermediates, unpersisted once eo and
-# adj are materialized. Released by tables.release_hot.
-_TRI_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_TRI_CACHE_N: dict[tuple, int] = {}
-
-
 def _tri_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
     """(eo, adj, n_edges): degree-oriented edges, oriented adjacency
-    arrays, and the real edge count that gates the adjacency broadcast."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _TRI_CACHE.get(key)
-    if got is not None:
-        eo, adj = got
-        return eo, adj, _TRI_CACHE_N[key]
-    items = persist_now(
+    arrays, and the real edge count that gates the adjacency broadcast.
+
+    A session artifact: eo and adj are pure functions of the corpus,
+    yet every q140 call once re-ran the lineitem self-join + degree
+    orientation AND leaked a fresh persisted copy of items/edges/deg.
+    One build per session: the per-call cost becomes the triangle
+    enumeration itself (the declared computation). items/edges/deg are
+    build-only intermediates the registry drops once eo and adj are
+    materialized."""
+    return artifact(spark, sf_dir, "triangle_graph",
+                    lambda keep: _tri_build(spark, sf_dir, keep))
+
+
+def _tri_build(spark, sf_dir, keep):
+    # items, edges and deg are each read from two subtrees of the next
+    # plan (self-join, the degree union, two degree broadcasts): count
+    # each before that plan runs
+    items = keep(
         _t(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
     )
+    items.count()
     b = items.select(F.col("ok"), F.col("pk").alias("pk_b"))
-    edges = persist_now(
+    edges = keep(
         items.join(b, "ok")
         .filter(F.col("pk") < F.col("pk_b"))
         .select(F.col("pk").alias("pa"), F.col("pk_b").alias("pb"))
         .distinct()
     )
-    deg = persist_now(
+    edges.count()
+    deg = keep(
         edges.select(F.col("pa").alias("node"))
         .unionAll(edges.select(F.col("pb").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
+    deg.count()
     # (node, degree) is node-cardinality — tiny next to edges; broadcast.
     dega = F.broadcast(deg.select(F.col("node").alias("pa"), F.col("d").alias("da")))
     degb = F.broadcast(deg.select(F.col("node").alias("pb"), F.col("d").alias("db")))
     a_low = _lex_lt(F.col("da"), F.col("pa"), F.col("db"), F.col("pb"))
-    # Oriented adjacency: one array row per node, E cells total.  The
-    # edge count IS the persist-materializing action (persist_counted),
-    # so the broadcast decision is driven by a real size at zero extra
-    # scans: hint only while the whole adjacency fits.
-    eo, n_edges = persist_counted(
+    # Oriented adjacency: one array row per node, E cells total. The
+    # broadcast decision is driven by a real size (one count over the
+    # cached frame): hint only while the whole adjacency fits.
+    eo = keep(
         edges.join(dega, "pa")
         .join(degb, "pb")
         .select(
@@ -167,13 +167,8 @@ def _tri_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, 
             F.when(a_low, F.col("pb")).otherwise(F.col("pa")).alias("v"),
         )
     )
-    adj = persist_now(
-        eo.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb"))
-    )
-    for df in (items, edges, deg):  # build-only intermediates
-        df.unpersist()
-    _TRI_CACHE[key] = (eo, adj)
-    _TRI_CACHE_N[key] = n_edges
+    n_edges = eo.count()
+    adj = eo.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb"))
     return eo, adj, n_edges
 
 

@@ -79,7 +79,7 @@ from kinesyslog_spark.operators.png import (
     to_gray,
 )
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import load_table, persist_now
+from kinesyslog_spark.tables import artifact, load_table
 
 HAM_T = 7        # hamming threshold; <= 7 guarantees a shared block
 HAM_T256 = 28    # 256-bit variant: floor(28/16) = 1 -> some 16-bit group <= 1
@@ -360,14 +360,13 @@ def _pack64(a):
 
 
 def _phash_bucket_pairs(pdf):
-    """q124's kernel (pandas form; the query runs the arrow twin)."""
+    """q124/q175's multi-index kernel over 64-bit hashes."""
     return _mih_bucket_pairs(pdf, HAM_T, _pack64)
 
 
 def _mih_bucket_pairs(pdf, thr, pack):
-    """pandas form of the multi-index kernel (kept as the direct-call
-    surface for the bucket-cap tests; the queries run the mapInArrow
-    twin below — same math via _mih_pairs_np)."""
+    """The multi-index kernel the queries run per coarse (gid) group
+    through applyInPandas; the math is _mih_pairs_np."""
     import numpy as np
     import pandas as pd
 
@@ -389,50 +388,6 @@ def _mih_bucket_pairs(pdf, thr, pack):
         return empty
     a, bb, h = got
     return pd.DataFrame({"doc_a": a, "doc_b": bb, "hamming": h})
-
-
-def _mih_arrow_kernel(thr, pack):
-    """mapInArrow form of the multi-index kernel (guide §4.3): the
-    coarse (gid) groups arrive as whole partitions — batches are
-    concatenated (the applyInPandas form materialized each group the
-    same way; several gids per partition are fine, the lexsort-run
-    bucket detection is keyed (g, b, v) regardless) and `ba` arrives as
-    ONE flat Arrow list buffer reshaped to the block-value matrix,
-    where pandas delivered an object Series that np.stack re-copied
-    row by row."""
-    import numpy as np
-    import pyarrow as pa
-
-    def fn(it):
-        batches = list(it)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        n = tbl.num_rows
-        if n < 2:
-            return
-        bcol = tbl.column("ba")
-        bc = bcol.chunk(0) if isinstance(bcol, pa.ChunkedArray) else bcol
-        nblk = len(bc[0])
-        got = _mih_pairs_np(
-            tbl.column("g").to_numpy().astype(np.int64, copy=False),
-            tbl.column("b").to_numpy().astype(np.int64, copy=False),
-            tbl.column("v").to_numpy().astype(np.int64, copy=False),
-            tbl.column("side").to_numpy().astype(np.int64, copy=False),
-            tbl.column("doc_id").to_numpy().astype(np.int64, copy=False),
-            np.asarray(bc.values).reshape(n, nblk),
-            thr, pack,
-        )
-        if got is None:
-            return
-        a, bb, h = got
-        yield pa.RecordBatch.from_pydict({
-            "doc_a": pa.array(a, pa.int64()),
-            "doc_b": pa.array(bb, pa.int64()),
-            "hamming": pa.array(h, pa.int64()),
-        })
-
-    return fn
 
 
 def _mih_pairs_np(g, b, v, side, ids, ba, thr, pack):
@@ -524,24 +479,20 @@ def _make_pop_lut():
 _POP_LUT = _make_pop_lut()
 
 
-# Session-memoized (doc_id, ba) pHash vectors per sf_dir — the
+# Session artifacts (doc_id, ba) pHash vectors per sf_dir — the
 # render -> PNG roundtrip -> DCT hash stages are the query's dominant
 # LINEAR cost (~7.6 s at sf1) and are exactly the artifact an image
 # dedup service keeps materialized (the hot_shingle_sigs pattern).
 # Released by tables.release_hot.
-_PHASH_CACHE: dict[tuple, DataFrame] = {}
 
 
 def hot_image_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized (doc_id, raster) decoded 32x32 gray rasters —
+    """Session artifact (doc_id, raster): decoded 32x32 gray rasters —
     ONE render + REAL-decode pass of the corpus shared by the three
     hash builders (each previously re-rendered and re-decoded the whole
-    corpus). Released by tables.release_hot via _PHASH_CACHE."""
-    key = (id(spark), sf_dir.rstrip("/"), "raster")
-    got = _PHASH_CACHE.get(key)
-    if got is None:
-        from kinesyslog_spark.tables import HOT_LEVEL
+    corpus). Released by tables.release_hot."""
 
+    def build(keep):
         docs = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -554,35 +505,36 @@ def hot_image_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
         payloads = docs.mapInPandas(
             render_png_batches, schema="doc_id long, payload binary"
         )
-        got = payloads.mapInPandas(
-            raster_batches, schema=RASTER_SCHEMA
-        ).persist(HOT_LEVEL)
-        got.count()
-        _PHASH_CACHE[key] = got
-    return got
+        return payloads.mapInPandas(raster_batches, schema=RASTER_SCHEMA)
+
+    return artifact(spark, sf_dir, "image_rasters", build)
 
 
-def hot_phash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _PHASH_CACHE.get(key)
-    if got is None:
-        from kinesyslog_spark.tables import HOT_LEVEL
+def _hash_vectors(spark: SparkSession, sf_dir: str, family: str,
+                  batches, schema: str) -> DataFrame:
+    """Session artifact (doc_id, ba): one raster-hash family's per-doc
+    block-value vectors, built from hot_image_rasters."""
 
+    def build(keep):
         blocks = hot_image_rasters(spark, sf_dir).mapInPandas(
-            phash_raster_batches, schema=PHASH_SCHEMA
+            batches, schema=schema
         )
-        got = (
+        return (
             blocks.groupBy("doc_id")
             .agg(F.array_sort(F.collect_list(F.struct("j", "bv"))).alias("s"))
             .select(
                 "doc_id",
                 F.transform("s", lambda st: st["bv"]).alias("ba"),
             )
-            .persist(HOT_LEVEL)
         )
-        got.count()
-        _PHASH_CACHE[key] = got
-    return got
+
+    return artifact(spark, sf_dir, family, build)
+
+
+def hot_phash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session artifact (doc_id, ba[8]): 64-bit DCT pHash vectors."""
+    return _hash_vectors(spark, sf_dir, "phash64", phash_raster_batches,
+                         PHASH_SCHEMA)
 
 
 def _mih64_tail(spark: SparkSession, v: DataFrame, name: str) -> DataFrame:
@@ -628,11 +580,11 @@ def _mih64_tail(spark: SparkSession, v: DataFrame, name: str) -> DataFrame:
         "gid", F.pmod(F.hash("g", "b", "v"), F.lit(_PHASH_GROUPS)).cast("int")
     )
     _mih_slot_budget_check(name, keyed.select("g", "b", "v", "side"))
-    # MEASURED AND KEPT AS applyInPandas (r13, guide §4.3 A/B): the
-    # mapInArrow twin (fine (g, b, v) repartition + _mih_arrow_kernel,
-    # kept above for the record) measured 1.51 s vs 0.92 s for this
-    # shape in an interleaved same-session noop A/B at sf0.1
-    # (tools/probe_mih_arrow.py) — the opposite of q38, whose arrow
+    # MEASURED AND KEPT AS applyInPandas (r13, guide §4.3 A/B): a
+    # mapInArrow twin (fine (g, b, v) repartition + an arrow kernel,
+    # since removed; VERDICT r13 keeps the numbers) measured 1.51 s vs
+    # 0.92 s for this shape in an interleaved same-session noop A/B at
+    # sf0.1 — the opposite of q38, whose arrow
     # port cut 28%. The difference: q38 ships few wide GEMM blocks
     # (object-array stacking dominated); this kernel ships 68 skinny
     # rows/doc into near-singleton buckets, already amortized by the
@@ -750,29 +702,10 @@ def phash256_raster_batches(
 
 
 def hot_phash256_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized (doc_id, ba[16]) 256-bit pHash vectors — same
-    artifact economics as hot_phash_vectors; shares _PHASH_CACHE (and
-    release_hot) under a tagged key."""
-    key = (id(spark), sf_dir.rstrip("/"), "256")
-    got = _PHASH_CACHE.get(key)
-    if got is None:
-        from kinesyslog_spark.tables import HOT_LEVEL
-
-        blocks = hot_image_rasters(spark, sf_dir).mapInPandas(
-            phash256_raster_batches, schema=PHASH256_SCHEMA
-        )
-        got = (
-            blocks.groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list(F.struct("j", "bv"))).alias("s"))
-            .select(
-                "doc_id",
-                F.transform("s", lambda st: st["bv"]).alias("ba"),
-            )
-            .persist(HOT_LEVEL)
-        )
-        got.count()
-        _PHASH_CACHE[key] = got
-    return got
+    """Session artifact (doc_id, ba[16]): 256-bit pHash vectors — same
+    artifact economics as hot_phash_vectors."""
+    return _hash_vectors(spark, sf_dir, "phash256", phash256_raster_batches,
+                         PHASH256_SCHEMA)
 
 
 def _q174_oracle() -> str:
@@ -844,7 +777,7 @@ def _pack256(a):
 
 
 def _phash256_bucket_pairs(pdf):
-    """q174's kernel (pandas form; the query runs the arrow twin)."""
+    """q174's multi-index kernel over 256-bit hashes."""
     return _mih_bucket_pairs(pdf, HAM_T256, _pack256)
 
 
@@ -1033,18 +966,13 @@ def dct_raster_batches(
 
 def hot_dct_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized (doc_id, cv[256]) exact DCT coefficient vectors
-    (shares _PHASH_CACHE / release_hot under a tagged key)."""
-    key = (id(spark), sf_dir.rstrip("/"), "coef")
-    got = _PHASH_CACHE.get(key)
-    if got is None:
-        from kinesyslog_spark.tables import HOT_LEVEL
-
-        got = hot_image_rasters(spark, sf_dir).mapInPandas(
+    (a session artifact, released by tables.release_hot)."""
+    return artifact(
+        spark, sf_dir, "dct_coeffs",
+        lambda keep: hot_image_rasters(spark, sf_dir).mapInPandas(
             dct_raster_batches, schema=COEFF_SCHEMA
-        ).persist(HOT_LEVEL)
-        got.count()
-        _PHASH_CACHE[key] = got
-    return got
+        ),
+    )
 
 
 PROJ_SCHEMA = "doc_id long, pj array<long>"
@@ -1179,8 +1107,9 @@ def q175_image_projhash_neardup(
             ).alias("cr")
         )
     )
-    proj = persist_now(
-        centered.mapInPandas(_proj_batches, schema=PROJ_SCHEMA)
+    proj = artifact(
+        spark, sf_dir, "q175_projections",
+        lambda keep: centered.mapInPandas(_proj_batches, schema=PROJ_SCHEMA),
     )
     # exact per-projection lower median (quantile_disc semantics: the
     # value at ascending rank ceil(n/2)) from the projection histogram;

@@ -36,7 +36,7 @@ from pyspark.sql.window import Window as W
 from kinesyslog_spark.queries import ORACLE, query
 from kinesyslog_spark.queries.cluster import connected_components
 from kinesyslog_spark.queries.imagehash import q175_image_projhash_neardup
-from kinesyslog_spark.tables import persist_now
+from kinesyslog_spark.tables import artifact
 
 
 def _q176_oracle() -> str:
@@ -78,41 +78,33 @@ def _q176_oracle() -> str:
     """
 
 
-_IMG_PAIR_CACHE: dict[tuple, DataFrame] = {}
-_IMG_COMP_CACHE: dict[tuple, DataFrame] = {}
-
-
 def hot_image_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized CC labels over the image pair graph:
+    """Session artifact: CC labels over the image pair graph:
     (node, component) — one pointer-jumping run shared by q176 and
     q184 (the hot_simhash_components pattern). Released by
     tables.release_hot."""
-    from kinesyslog_spark.tables import persist_now as _pn
 
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _IMG_COMP_CACHE.get(key)
-    if got is None:
+    def build(keep):
         pairs = hot_image_pairs(spark, sf_dir)
-        got = _pn(connected_components(
+        return connected_components(
             pairs.select(F.col("doc_a").alias("src"),
-                         F.col("doc_b").alias("dst"))
-        ))
-        _IMG_COMP_CACHE[key] = got
-    return got
+                         F.col("doc_b").alias("dst")),
+            keep,
+        )
+
+    return artifact(spark, sf_dir, "image_components", build)
 
 
 def hot_image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized, persisted q175 pair graph — the image-dedup
+    """Session artifact: the persisted q175 pair graph — the image-dedup
     family artifact (the hot_shingle_sigs pattern: edges are read in
     both union directions by the CC loop and again by the per-cluster
     diagnostics, and a dedup service keeps exactly this materialized).
     Released by tables.release_hot."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _IMG_PAIR_CACHE.get(key)
-    if got is None:
-        got = persist_now(q175_image_projhash_neardup(spark, sf_dir))
-        _IMG_PAIR_CACHE[key] = got
-    return got
+    return artifact(
+        spark, sf_dir, "image_pairs",
+        lambda keep: q175_image_projhash_neardup(spark, sf_dir),
+    )
 
 
 @query("q176_image_dedup_survivors", oracle=_q176_oracle())

@@ -61,24 +61,16 @@ def _hot_masked(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, and q137 was paying it TWICE: once per output branch);
     persisting it once is the local analog of the materialized
     parse stage a production pipeline writes before any mining."""
-    from kinesyslog_spark.tables import _HOT_CACHE
+    from kinesyslog_spark.tables import artifact
 
-    key = (id(spark), sf_dir.rstrip("/"), "__masked_syslog__")
-    df = _HOT_CACHE.get(key)
-    if df is None:
-        from pyspark import StorageLevel
-
+    def build(keep):
         parsed = parse_syslog(_synth_syslog(spark, sf_dir))
-        # MEMORY_ONLY: the default MEMORY_AND_DISK level pays a
-        # compressed-columnar conversion that measured ~2x the parse
-        # itself; recomputing on eviction costs one map-only pass.
-        df = parsed.select(
+        return parsed.select(
             F.regexp_replace("message", "[0-9]+", "#").alias("template"),
             "source", "prio", "message", "ts_ms",
-        ).persist(StorageLevel.MEMORY_ONLY)
-        df.count()
-        _HOT_CACHE[key] = df
-    return df
+        )
+
+    return artifact(spark, sf_dir, "masked_syslog", build)
 
 
 @query("q137_log_templates", oracle=_Q137_ORACLE)

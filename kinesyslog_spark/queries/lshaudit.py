@@ -117,48 +117,49 @@ FROM agg
 
 @query("q172_lsh_recall_audit", oracle=_Q172_ORACLE)
 def q172_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesyslog_spark.tables import persist_now
+    from kinesyslog_spark.tables import scratch
 
     sh, _sigs = hot_shingle_sigs(spark, sf_dir)
     # One cheap action on the already-persisted shingle frame sizes the
     # modulus; the quadratic below then touches <= TARGET_SAMPLE docs in
     # expectation regardless of corpus size.
     mod = sample_mod(sh.count())
-    samp = persist_now(
-        sh.filter(
-            md5_int60(F.col("doc_id").cast("string"), "rs:") % mod == 0
+    with scratch() as keep:
+        samp = keep(
+            sh.filter(
+                md5_int60(F.col("doc_id").cast("string"), "rs:") % mod == 0
+            )
         )
-    )
-    a = samp.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = samp.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    truth = persist_now(
-        a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .filter(
-            F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 4) >= JACCARD_THR
+        a = samp.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+        b = samp.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+        truth = keep(
+            a.join(b, F.col("doc_a") < F.col("doc_b"))
+            .filter(
+                F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 4) >= JACCARD_THR
+            )
+            .select("doc_a", "doc_b")
         )
-        .select("doc_a", "doc_b")
-    )
-    ids = samp.select("doc_id")
-    found = (
-        hot_minhash_pairs(spark, sf_dir)
-        .join(ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
-        .join(ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
-        .select("doc_a", "doc_b")
-    )
-    hit = truth.join(found, ["doc_a", "doc_b"], "left_semi")
-    n_samp = samp.count()
-    n_true = truth.count()
-    n_found = hit.count()
-    recall = (
-        1.0 if n_true == 0
-        else _fl6(n_found / n_true)
-    )
-    return local_frame(
-        spark,
-        [(n_samp, n_true, n_found, recall, _fl6(_EXPECT))],
-        "n_sample_docs long, n_true_pairs long, n_found_pairs long, "
-        "recall double, band_model_at_threshold double",
-    )
+        ids = samp.select("doc_id")
+        found = (
+            hot_minhash_pairs(spark, sf_dir)
+            .join(ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
+            .join(ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
+            .select("doc_a", "doc_b")
+        )
+        hit = truth.join(found, ["doc_a", "doc_b"], "left_semi")
+        n_samp = samp.count()
+        n_true = truth.count()
+        n_found = hit.count()
+        recall = (
+            1.0 if n_true == 0
+            else _fl6(n_found / n_true)
+        )
+        return local_frame(
+            spark,
+            [(n_samp, n_true, n_found, recall, _fl6(_EXPECT))],
+            "n_sample_docs long, n_true_pairs long, n_found_pairs long, "
+            "recall double, band_model_at_threshold double",
+        )
 
 
 def _fl6(x: float) -> float:

@@ -113,14 +113,13 @@ def _nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     per session (q158 ranks it, q159 builds a histogram AND composes
     q158's exact arm: without memoization one q159 run executed the
     tokenize+train+score pipeline three times)."""
-    from pyspark import StorageLevel
+    from kinesyslog_spark.tables import artifact
 
-    from kinesyslog_spark.tables import _HOT_CACHE
+    return artifact(spark, sf_dir, "nb_scores",
+                    lambda keep: _nb_build(spark, sf_dir))
 
-    key = (id(spark), sf_dir.rstrip("/"), "__nb_scores__")
-    cached = _HOT_CACHE.get(key)
-    if cached is not None:
-        return cached
+
+def _nb_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Label-weighted counts derive exactly from the postings artifact
     # (tables.hot_postings): per-token instance sums over the exploded
     # stream equal SUM(tf * y) / SUM(tf * (1-y)) over (doc, token)
@@ -164,7 +163,7 @@ def _nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("decimal(12,6)").alias("p")
         )
     )
-    scores = (
+    return (
         tok.join(F.broadcast(model), tok.token == model.w)
         .groupBy("doc_id")
         .agg(
@@ -177,11 +176,7 @@ def _nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "y", (F.col("s0") + F.col("p")).alias("score")
         )
-        .persist(StorageLevel.MEMORY_ONLY)
     )
-    scores.count()
-    _HOT_CACHE[key] = scores
-    return scores
 
 
 @query("q157_naive_bayes_lang", oracle=_Q157_ORACLE)
@@ -393,7 +388,10 @@ def q159_binned_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg), and each reference re-executed the bin+min/max pipeline over
     # the scored corpus — pure scheduler cost on a tiny frame (the q170
     # lesson; round-6 verdict #4 measured 62 exchanges here).
-    h = class_histogram(scores, mm).localCheckpoint()
+    from kinesyslog_spark.tables import artifact
+
+    h = artifact(spark, sf_dir, "q159_histogram",
+                 lambda keep: keep.checkpoint(class_histogram(scores, mm)))
     est = auc_from_histogram(h)
     exact = q158_auc_nb_scores(spark, sf_dir).select(
         F.col("auc").alias("auc_exact")

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from kinesyslog_spark.queries import query
 from kinesyslog_spark.queries.ml import _nb_scores, _nb_scores_sql
-from kinesyslog_spark.tables import hot_table, hot_tokens
+from kinesyslog_spark.tables import artifact, hot_table, hot_tokens
 
 GD_ITERS = 3
 GD_LR = 1.0
@@ -160,9 +160,8 @@ def _sigmoid(z: Column) -> Column:
 
 @query("q161_logreg_gd", oracle=_q161_oracle())
 def q161_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
-    feats = _features(spark, sf_dir).persist(StorageLevel.MEMORY_ONLY)
+    feats = artifact(spark, sf_dir, "q161_features",
+                     lambda keep: _features(spark, sf_dir))
     w = [0.0] * N_FEATURES
     for _ in range(GD_ITERS):
         z = sum(

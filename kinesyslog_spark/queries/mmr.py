@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from kinesyslog_spark.operators.localframe import local_frame
 from kinesyslog_spark.queries import query
 from kinesyslog_spark.queries.llm import EMB_DIM
-from kinesyslog_spark.tables import hot_vectors
+from kinesyslog_spark.tables import hot_vectors, scratch
 
 MMR_PROBE = 0      # query vector id
 MMR_N = 40         # candidate pool (top-N by relevance)
@@ -128,8 +128,8 @@ FROM ({picks}) ORDER BY rank
 
 @query("q147_mmr_rerank", oracle=_oracle())
 def q147_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cands = _candidates(spark, sf_dir).persist()
-    try:
+    with scratch() as keep:
+        cands = keep(_candidates(spark, sf_dir))
         selected: list[tuple[int, float]] = []  # (vec_id, score)
         sel_embs: list[list[float]] = []
         for _rank in range(MMR_K):
@@ -175,5 +175,3 @@ def q147_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             rows, "rank long, vec_id long, mmr_score double"
         ).orderBy("rank")
-    finally:
-        cands.unpersist()

@@ -154,9 +154,10 @@ def q167_hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("zs_u")
         )
     )
-    from kinesyslog_spark.tables import persist_now
+    from kinesyslog_spark.tables import artifact
 
-    du = persist_now(h.select("user_id", "et").distinct())
+    du = artifact(spark, sf_dir, "q167_user_types",
+                  lambda keep: h.select("user_id", "et").distinct())
     db = du.select("user_id", F.col("et").alias("et_b"))
     exact = (
         du.join(db, "user_id")

@@ -52,11 +52,11 @@ from pyspark.sql.window import Window as W
 from kinesyslog_spark.operators.text import TOKEN_RE, tokens, word_shingles
 from kinesyslog_spark.queries import query
 from kinesyslog_spark.tables import (
+    artifact,
     hot_postings,
     hot_table,
     hot_tokens,
     hot_vocab,
-    persist_now,
 )
 
 BOILER_N = 5        # word n-gram passage unit
@@ -101,9 +101,10 @@ def _q54_oracle() -> str:
 @query("q54_boilerplate_passages", oracle=_q54_oracle())
 def q54_boilerplate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = hot_tokens(spark, sf_dir)
-    grams = persist_now(
-        toks.filter(F.size("toks") >= BOILER_N)
-        .select("doc_id", word_shingles(F.col("toks"), BOILER_N).alias("grams"))
+    grams = artifact(
+        spark, sf_dir, "q54_grams",
+        lambda keep: toks.filter(F.size("toks") >= BOILER_N)
+        .select("doc_id", word_shingles(F.col("toks"), BOILER_N).alias("grams")),
     )
     flat = grams.select("doc_id", F.explode("grams").alias("gram"))
     boiler = (

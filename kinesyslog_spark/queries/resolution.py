@@ -545,9 +545,6 @@ def _q121_oracle() -> str:
     """
 
 
-_RANK_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def hot_shingle_rank(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Session artifact shared by the prefix-filter joins (q121/q122):
     (tk, ranked) where tk = (doc_id, ts) word-3-gram shingle SETS and
@@ -562,32 +559,27 @@ def hot_shingle_rank(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     value-identical shingle-only frame instead of paying the K MinHash
     aggregates. Released by tables.release_hot."""
     import kinesyslog_spark.queries.dedup as dd
-    from kinesyslog_spark.tables import HOT_LEVEL
+    from kinesyslog_spark.tables import artifact
 
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _RANK_CACHE.get(key)
-    if got is None:
-        # One corpus shingle pass for the whole MinHash + prefix-join
-        # family: dedup.hot_shingles returns the session's persisted
-        # shingle frame whichever family built it first (round-12
-        # ADVICE — this used to peek at dd._SIG_CACHE, so a
-        # prefix-join-first session persisted a duplicate pass).
-        tk = dd.hot_shingles(spark, sf_dir).select(
-            "doc_id", F.col("sh").alias("ts")
-        )
+    # One corpus shingle pass for the whole MinHash + prefix-join
+    # family: dedup.hot_shingles is the session's shingle artifact
+    # whichever family built it first; tk is a rename over it, never a
+    # second persisted copy.
+    tk = dd.hot_shingles(spark, sf_dir).select(
+        "doc_id", F.col("sh").alias("ts")
+    )
+
+    def build(keep):
         toks = tk.select("doc_id", F.explode("ts").alias("tok"))
         df = toks.groupBy("tok").agg(F.count("*").alias("dfreq"))
         wr = W.partitionBy("doc_id").orderBy("dfreq", "tok")
-        ranked = (
+        return (
             toks.join(df, "tok")
             .withColumn("r", F.row_number().over(wr))
             .withColumn("l", F.count("*").over(W.partitionBy("doc_id")))
-            .persist(HOT_LEVEL)
         )
-        ranked.count()
-        got = (tk, ranked)
-        _RANK_CACHE[key] = got
-    return got
+
+    return tk, artifact(spark, sf_dir, "shingle_rank", build)
 
 
 @query("q121_prefix_filter_join", oracle=_q121_oracle())

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from kinesyslog_spark.operators.text import TOKEN_RE
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import hot_postings, persist_now
+from kinesyslog_spark.tables import artifact, hot_postings
 
 # BM25 parameters (the standard Robertson defaults).
 BM25_K1 = 1.2
@@ -98,7 +98,8 @@ def q68_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter on the already-aggregated rows, and document frequency is
     # COUNT(*) per token (postings hold one row per (doc, token)).
     post = hot_postings(spark, sf_dir)
-    dl = persist_now(post.groupBy("doc_id").agg(F.sum("tf").alias("dl")))
+    dl = artifact(spark, sf_dir, "q68_doc_lengths",
+                  lambda keep: post.groupBy("doc_id").agg(F.sum("tf").alias("dl")))
     stats = dl.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     )

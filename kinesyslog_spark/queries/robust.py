@@ -96,39 +96,37 @@ def _q171_oracle() -> str:
 
 @query("q171_robust_outlier_audit", oracle=_q171_oracle())
 def q171_robust_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
+    from kinesyslog_spark.tables import scratch
 
     outs = []
     for table, col in _COLS:
         # decimal(12,2) -> double is exact for these magnitudes, and the
         # oracle's SUM(CAST(x AS DOUBLE))/COUNT over the two middle rows
         # is the same arithmetic as averaging the two selected doubles.
-        vals = (
-            _t(spark, sf_dir, table)
-            .select(
-                F.col(col).cast("decimal(12,2)").cast("double").alias("x")
+        with scratch() as keep:
+            vals = keep(
+                _t(spark, sf_dir, table)
+                .select(
+                    F.col(col).cast("decimal(12,2)").cast("double").alias("x")
+                )
             )
-            .persist(StorageLevel.MEMORY_ONLY)
-        )
-        med, n = exact_median(vals, "x")
-        dev = vals.select(
-            (F.abs(F.col("x") - F.lit(med))).alias("d")
-        ).persist(StorageLevel.MEMORY_ONLY)
-        mad, _ = exact_median(dev, "d")
-        z_q = F.floor(
-            F.col("d") / (ROBUST_K * F.lit(mad)) * 1000000 + F.lit(0.5)
-        ) / 1000000
-        agg = dev.agg(
-            F.sum((z_q > ROBUST_CUT).cast("long")).alias("n_out")
-        ).collect()[0]
-        n_out = int(agg["n_out"])
-        outs.append((
-            f"{table}.{col}", n,
-            _fl6(med), _fl6(mad), n_out,
-            _fl6(n_out / n),
-        ))
-        vals.unpersist()
-        dev.unpersist()
+            med, n = exact_median(vals, "x")
+            dev = keep(vals.select(
+                (F.abs(F.col("x") - F.lit(med))).alias("d")
+            ))
+            mad, _ = exact_median(dev, "d")
+            z_q = F.floor(
+                F.col("d") / (ROBUST_K * F.lit(mad)) * 1000000 + F.lit(0.5)
+            ) / 1000000
+            agg = dev.agg(
+                F.sum((z_q > ROBUST_CUT).cast("long")).alias("n_out")
+            ).collect()[0]
+            n_out = int(agg["n_out"])
+            outs.append((
+                f"{table}.{col}", n,
+                _fl6(med), _fl6(mad), n_out,
+                _fl6(n_out / n),
+            ))
     return local_frame(
         spark,
         outs,

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from kinesyslog_spark.queries import query
 from kinesyslog_spark.queries.ann import _ORACLE_DOT, _dot
-from kinesyslog_spark.tables import hot_vectors
+from kinesyslog_spark.tables import artifact, hot_vectors
 
 KMEANS_K = 8
 KMEANS_ITERS = 3
@@ -54,9 +54,6 @@ SEMDUP_COS = 0.4  # same sim scale as q38 (corpus cosines are small)
 # scaled-integer quantization (see module header)
 _D2_SCALE = 1e10
 _C_SCALE = 1e9
-
-_KMEANS_CACHE: dict[tuple, tuple] = {}
-_CENTROID_CACHE: dict[tuple, list] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -84,17 +81,35 @@ def kmeans_assignments(
     base: DataFrame | None = None, tag: str = "",
 ) -> DataFrame:
     """Final (vec_id, cid, d2) assignment after `iters` Lloyd rounds —
-    session-memoized (persisted) so q77/q78 share one clustering run.
+    a session artifact (persisted) so q77/q78 share one clustering run.
 
     `base` overrides the input (vec_id, emb) frame (q105 clusters
-    SUBVECTORS with the same machinery); `tag` disambiguates the memo
-    key for such callers. The final centroids are retrievable via
-    kmeans_centroids() — PQ's ADC tables need them."""
-    key = (id(spark), sf_dir.rstrip("/"), k, iters, tag)
-    got = _KMEANS_CACHE.get(key)
-    if got is not None:
-        return got
+    SUBVECTORS with the same machinery); `tag` disambiguates the
+    artifact key for such callers. The final centroids are retrievable
+    via kmeans_centroids() — PQ's ADC tables need them."""
+    return _kmeans(spark, sf_dir, k, iters, base, tag)[0]
 
+
+def kmeans_centroids(
+    spark: SparkSession, sf_dir: str, k: int = KMEANS_K, iters: int = KMEANS_ITERS,
+    base: DataFrame | None = None, tag: str = "",
+) -> list[tuple[int, list[float]]]:
+    """The centroids the final kmeans_assignments() round assigned
+    against (i.e. after iters-1 updates). Runs the clustering if the
+    artifact is cold."""
+    return _kmeans(spark, sf_dir, k, iters, base, tag)[1]
+
+
+def _kmeans(spark, sf_dir, k, iters, base, tag):
+    """Session artifact (assignments, centroids) of one clustering run."""
+    return artifact(
+        spark, sf_dir, "kmeans",
+        lambda keep: _lloyd(spark, sf_dir, k, iters, base),
+        knobs=(k, iters, tag),
+    )
+
+
+def _lloyd(spark, sf_dir, k, iters, base):
     if base is None:
         base = hot_vectors(spark, sf_dir)  # (vec_id, label, emb double[], nrm)
 
@@ -140,24 +155,7 @@ def kmeans_assignments(
             cents.setdefault(int(row.cid), [0.0] * dim)[int(row.d) - 1] = float(row.c)
         centroids = [(cid, cents[cid]) for cid in sorted(cents)]
 
-    out = assigned.select("vec_id", "cid", "d2").persist()
-    out.count()
-    _KMEANS_CACHE[key] = out
-    _CENTROID_CACHE[key] = centroids
-    return out
-
-
-def kmeans_centroids(
-    spark: SparkSession, sf_dir: str, k: int = KMEANS_K, iters: int = KMEANS_ITERS,
-    base: DataFrame | None = None, tag: str = "",
-) -> list[tuple[int, list[float]]]:
-    """The centroids the final kmeans_assignments() round assigned
-    against (i.e. after iters-1 updates). Runs the clustering if the
-    memo is cold."""
-    key = (id(spark), sf_dir.rstrip("/"), k, iters, tag)
-    if key not in _CENTROID_CACHE:
-        kmeans_assignments(spark, sf_dir, k, iters, base=base, tag=tag)
-    return _CENTROID_CACHE[key]
+    return assigned.select("vec_id", "cid", "d2"), centroids
 
 
 # ---------------------------------------------------------------------------

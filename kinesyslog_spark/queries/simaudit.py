@@ -123,7 +123,7 @@ FROM agg
 def q181_simhash_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from kinesyslog_spark.tables import persist_now
+    from kinesyslog_spark.tables import scratch
 
     grp, blk = hot_simhash_groups(spark, sf_dir)
     # per-doc fingerprint halves from the family artifact (one row per
@@ -132,79 +132,80 @@ def q181_simhash_recall_audit(
         F.explode("members").alias("doc_id"), "rep", "hi", "lo"
     )
     mod = sample_mod(mem.count())
-    samp = persist_now(
-        mem.filter(
-            md5_int60(F.col("doc_id").cast("string"), "sh:") % mod == 0
+    with scratch() as keep:
+        samp = keep(
+            mem.filter(
+                md5_int60(F.col("doc_id").cast("string"), "sh:") % mod == 0
+            )
         )
-    )
-    a = samp.select(
-        F.col("doc_id").alias("doc_a"), F.col("rep").alias("rep_a"),
-        F.col("hi").alias("hi_a"), F.col("lo").alias("lo_a"),
-    )
-    b = samp.select(
-        F.col("doc_id").alias("doc_b"), F.col("rep").alias("rep_b"),
-        F.col("hi").alias("hi_b"), F.col("lo").alias("lo_b"),
-    )
-    truth = persist_now(
-        a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .filter(
-            hamming_from_halves(
-                F.col("hi_a"), F.col("lo_a"), F.col("hi_b"), F.col("lo_b")
-            ) <= HAMMING_THR
+        a = samp.select(
+            F.col("doc_id").alias("doc_a"), F.col("rep").alias("rep_a"),
+            F.col("hi").alias("hi_a"), F.col("lo").alias("lo_a"),
         )
-        .select("doc_a", "doc_b", "rep_a", "rep_b")
-    )
-    ids = samp.select("doc_id")
-    # the PERSISTED family pair artifact (hot_simhash_pairs), not the
-    # raw q27 plan: the audit reads `found` from three actions
-    # (hit/missed/shared), and an unpersisted q27 re-executed its
-    # whole combo-join tail per action — 5.3 s for the first count
-    # alone at sf0.1 (OPTIMIZATION_r12)
-    from kinesyslog_spark.queries.simresolve import hot_simhash_pairs
+        b = samp.select(
+            F.col("doc_id").alias("doc_b"), F.col("rep").alias("rep_b"),
+            F.col("hi").alias("hi_b"), F.col("lo").alias("lo_b"),
+        )
+        truth = keep(
+            a.join(b, F.col("doc_a") < F.col("doc_b"))
+            .filter(
+                hamming_from_halves(
+                    F.col("hi_a"), F.col("lo_a"), F.col("hi_b"), F.col("lo_b")
+                ) <= HAMMING_THR
+            )
+            .select("doc_a", "doc_b", "rep_a", "rep_b")
+        )
+        ids = samp.select("doc_id")
+        # the PERSISTED family pair artifact (hot_simhash_pairs), not the
+        # raw q27 plan: the audit reads `found` from three actions
+        # (hit/missed/shared), and an unpersisted q27 re-executed its
+        # whole combo-join tail per action — 5.3 s for the first count
+        # alone at sf0.1 (OPTIMIZATION_r12)
+        from kinesyslog_spark.queries.simresolve import hot_simhash_pairs
 
-    found = (
-        hot_simhash_pairs(spark, sf_dir)
-        .join(ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
-        .join(ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
-        .select("doc_a", "doc_b")
-    )
-    hit = truth.join(found, ["doc_a", "doc_b"], "left_semi")
-    missed = persist_now(
-        truth.join(found, ["doc_a", "doc_b"], "left_anti")
-    )
-    # attribution: does the missed pair's rep pair share ANY pre-cap
-    # combo key? (tiny set x combo frame — two hash joins)
-    keyed = combo_keyed(blk).select("doc_id", "cid", "ckey")
-    ka = keyed.select(
-        F.col("doc_id").alias("rep_a"), "cid", "ckey"
-    )
-    kb = keyed.select(
-        F.col("doc_id").alias("rep_b"), "cid", "ckey"
-    )
-    shared = (
-        missed.join(ka, "rep_a")
-        .join(kb, ["rep_b", "cid", "ckey"])
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    n_samp = samp.count()
-    n_true = truth.count()
-    n_found = hit.count()
-    n_missed = missed.count()
-    # the attribution join drives the combo-key explode over the whole
-    # block frame — skip it when there is nothing to attribute (the
-    # recall-1.0 common case at every measured SF)
-    n_shared = shared.count() if n_missed else 0
-    recall = 1.0 if n_true == 0 else _fl6(n_found / n_true)
-    return local_frame(
-        spark,
-        [(
-            n_samp, n_true, n_found, recall,
-            n_shared, n_missed - n_shared,
-        )],
-        "n_sample_docs long, n_true_pairs long, n_found_pairs long, "
-        "recall double, missed_by_cap long, missed_by_blocking long",
-    )
+        found = (
+            hot_simhash_pairs(spark, sf_dir)
+            .join(ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
+            .join(ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
+            .select("doc_a", "doc_b")
+        )
+        hit = truth.join(found, ["doc_a", "doc_b"], "left_semi")
+        missed = keep(
+            truth.join(found, ["doc_a", "doc_b"], "left_anti")
+        )
+        # attribution: does the missed pair's rep pair share ANY pre-cap
+        # combo key? (tiny set x combo frame — two hash joins)
+        keyed = combo_keyed(blk).select("doc_id", "cid", "ckey")
+        ka = keyed.select(
+            F.col("doc_id").alias("rep_a"), "cid", "ckey"
+        )
+        kb = keyed.select(
+            F.col("doc_id").alias("rep_b"), "cid", "ckey"
+        )
+        shared = (
+            missed.join(ka, "rep_a")
+            .join(kb, ["rep_b", "cid", "ckey"])
+            .select("doc_a", "doc_b")
+            .distinct()
+        )
+        n_samp = samp.count()
+        n_true = truth.count()
+        n_found = hit.count()
+        n_missed = missed.count()
+        # the attribution join drives the combo-key explode over the whole
+        # block frame — skip it when there is nothing to attribute (the
+        # recall-1.0 common case at every measured SF)
+        n_shared = shared.count() if n_missed else 0
+        recall = 1.0 if n_true == 0 else _fl6(n_found / n_true)
+        return local_frame(
+            spark,
+            [(
+                n_samp, n_true, n_found, recall,
+                n_shared, n_missed - n_shared,
+            )],
+            "n_sample_docs long, n_true_pairs long, n_found_pairs long, "
+            "recall double, missed_by_cap long, missed_by_blocking long",
+        )
 
 
 def _fl6(x: float) -> float:

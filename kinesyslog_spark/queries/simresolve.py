@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from kinesyslog_spark.queries import ORACLE, query
 from kinesyslog_spark.queries.cluster import connected_components
 from kinesyslog_spark.queries.dedup import q27_simhash_pairs
-from kinesyslog_spark.tables import persist_now
+from kinesyslog_spark.tables import artifact
 
 
 def _q182_oracle() -> str:
@@ -80,39 +80,38 @@ def _q182_oracle() -> str:
     """
 
 
-_SIM_PAIR_CACHE: dict[tuple, DataFrame] = {}
-_SIM_COMP_CACHE: dict[tuple, DataFrame] = {}
-
-
 def hot_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized, persisted q27 pair graph — the SimHash-family
-    artifact (the hot_image_pairs pattern). Released by
-    tables.release_hot."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _SIM_PAIR_CACHE.get(key)
-    if got is None:
-        got = persist_now(q27_simhash_pairs(spark, sf_dir))
-        _SIM_PAIR_CACHE[key] = got
-    return got
+    """Session artifact: the persisted q27 pair graph — the
+    SimHash-family artifact (the hot_image_pairs pattern). Keyed on the
+    budget knobs q27's guard reads. Released by tables.release_hot."""
+    from kinesyslog_spark.queries.dedup import LSH_MAX_BUCKET, LSH_MAX_SLOTS
+
+    return artifact(
+        spark, sf_dir, "simhash_pairs",
+        lambda keep: q27_simhash_pairs(spark, sf_dir),
+        knobs=(LSH_MAX_BUCKET, LSH_MAX_SLOTS),
+    )
 
 
 def hot_simhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized CC labels over the SimHash pair graph:
+    """Session artifact: CC labels over the SimHash pair graph:
     (node, component). One pointer-jumping run feeds q182's closure
     rollup AND q183/q185's refinement stage (which used to re-run the
     loop per query — a full CC pass saved per sweep, and fewer
     checkpoint blocks alive in a default-heap session). Released by
     tables.release_hot."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    got = _SIM_COMP_CACHE.get(key)
-    if got is None:
+    from kinesyslog_spark.queries.dedup import LSH_MAX_BUCKET, LSH_MAX_SLOTS
+
+    def build(keep):
         pairs = hot_simhash_pairs(spark, sf_dir)
-        got = persist_now(connected_components(
+        return connected_components(
             pairs.select(F.col("doc_a").alias("src"),
-                         F.col("doc_b").alias("dst"))
-        ))
-        _SIM_COMP_CACHE[key] = got
-    return got
+                         F.col("doc_b").alias("dst")),
+            keep,
+        )
+
+    return artifact(spark, sf_dir, "simhash_components", build,
+                    knobs=(LSH_MAX_BUCKET, LSH_MAX_SLOTS))
 
 
 @query("q182_simhash_dedup_survivors", oracle=_q182_oracle())

@@ -22,7 +22,7 @@ from pyspark.sql.window import Window as W
 
 from kinesyslog_spark.operators.text import char_grams, winnow_fingerprints
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import hot_table, load_table, persist_now
+from kinesyslog_spark.tables import artifact, hot_table, load_table
 
 PROFILE_TOP_N = 20
 TRIGRAM_N = 3
@@ -75,7 +75,10 @@ def q30_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Materialized: the exploded trigram stream feeds profile building AND
     # per-doc scoring; recomputing it doubles the interpreted HOF cost.
-    dt = persist_now(d.select("doc_id", "lang", F.explode("tg").alias("g")))
+    dt = artifact(
+        spark, sf_dir, "q30_trigrams",
+        lambda keep: d.select("doc_id", "lang", F.explode("tg").alias("g")),
+    )
 
     prof = (
         dt.groupBy("lang", "g")
@@ -207,15 +210,13 @@ def _q45_oracle() -> str:
 
 @query("q45_tfidf_top_terms", oracle=_q45_oracle())
 def q45_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesyslog_spark.tables import hot_tokens
+    from kinesyslog_spark.tables import hot_postings
 
-    tf = (
-        hot_tokens(spark, sf_dir)
-        .select("doc_id", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
+    # the per-(doc, term) counts ARE the postings artifact (it feeds
+    # df-counts, N, and the scoring join)
+    tf = hot_postings(spark, sf_dir).select(
+        "doc_id", F.col("token").alias("term"), "tf"
     )
-    tf = persist_now(tf)  # feeds df-counts, N, and the scoring join
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = tf.select(F.countDistinct("doc_id").alias("n"))
     scored = (

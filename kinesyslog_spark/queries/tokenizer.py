@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from kinesyslog_spark.operators.localframe import local_frame
 from kinesyslog_spark.operators.text import TOKEN_RE
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import hot_tokens, persist_now
+from kinesyslog_spark.tables import artifact, hot_tokens
 
 BPE_ROUNDS = 6
 
@@ -92,29 +92,27 @@ def _q83_oracle(rounds: int = BPE_ROUNDS) -> str:
     return f"WITH {_bpe_ctes(rounds)} {rows} ORDER BY rnd"
 
 
-_MERGES_CACHE: dict[tuple, list] = {}
-
-
 def bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    """The learned merge table as driver-side literals — session-memoized
-    so q83 (trainer output) and q109 (encoder) train once."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    if key not in _MERGES_CACHE:
-        q83_bpe_merges(spark, sf_dir)
-    return _MERGES_CACHE[key]
+    """The learned merge table as driver-side literals — a session
+    artifact so q83 (trainer output) and q109 (encoder) train once."""
+    return artifact(spark, sf_dir, "bpe_merges",
+                    lambda keep: _train_bpe(spark, sf_dir, keep),
+                    knobs=(BPE_ROUNDS,))
 
 
 @query("q83_bpe_merges", oracle=_q83_oracle())
 def q83_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir.rstrip("/"))
-    cached = _MERGES_CACHE.get(key)
-    if cached is not None:
-        return local_frame(
-            spark, cached,
-            "rnd int, s1 string, s2 string, merged string, cnt bigint",
-        ).orderBy("rnd")
-    # the single corpus-scale pass: word frequencies
-    words = persist_now(
+    return local_frame(
+        spark, bpe_merges(spark, sf_dir),
+        "rnd int, s1 string, s2 string, merged string, cnt bigint",
+    ).orderBy("rnd")
+
+
+def _train_bpe(spark: SparkSession, sf_dir: str, keep) -> list[tuple]:
+    # the single corpus-scale pass: word frequencies; each round's
+    # rewritten vocabulary is kept for the next round's pair count
+    # (vocabulary-sized frames, dropped when training ends)
+    words = keep(
         hot_tokens(spark, sf_dir)
         .select(F.explode("toks").alias("word"))
         .groupBy("word")
@@ -160,17 +158,8 @@ def q83_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(f" {best.s1}{best.s2} "),
                 ).alias("rep"),
             )
-            old, rep_df = rep_df, persist_now(nxt)
-            if old is not words:
-                old.unpersist()
-    if rep_df is not words:
-        rep_df.unpersist()
-    words.unpersist()
-    _MERGES_CACHE[key] = merges
-    return local_frame(
-        spark, merges,
-        "rnd int, s1 string, s2 string, merged string, cnt bigint",
-    ).orderBy("rnd")
+            rep_df = keep(nxt)
+    return merges
 
 
 # ---------------------------------------------------------------------------

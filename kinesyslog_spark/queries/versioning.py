@@ -80,14 +80,20 @@ def _q170_oracle() -> str:
 def q170_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesyslog_spark.queries.pipeline_ops import q81_scd2_history
 
-    # localCheckpoint, NOT persist_now: both snapshots read the history
-    # twice, but persist() registers the q81 plan in the CacheManager
-    # and Spark would then substitute the InMemoryRelation into every
-    # LATER q81 call in the session (plan-matching cache lookup) —
-    # changing q81's own executed plan from under its plan-guard test.
-    # localCheckpoint materializes + truncates lineage without entering
-    # the cache registry.
-    hist = q81_scd2_history(spark, sf_dir).localCheckpoint()
+    # A session artifact holding a local checkpoint, not a persisted
+    # frame: both snapshots read the history twice, but persist()
+    # registers the q81 plan in the CacheManager and Spark would then
+    # substitute the InMemoryRelation into every LATER q81 call in the
+    # session (plan-matching cache lookup) — changing q81's own
+    # executed plan from under its plan-guard test. localCheckpoint
+    # materializes + truncates lineage without entering the cache
+    # registry.
+    from kinesyslog_spark.tables import artifact
+
+    hist = artifact(
+        spark, sf_dir, "q170_history",
+        lambda keep: keep.checkpoint(q81_scd2_history(spark, sf_dir)),
+    )
     rng = hist.agg(
         F.min("valid_from_ms").alias("a"), F.max("valid_from_ms").alias("b")
     ).collect()[0]

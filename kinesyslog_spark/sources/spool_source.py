@@ -35,7 +35,6 @@ clear ImportError otherwise).
 
 from __future__ import annotations
 
-import json
 import os
 from typing import TYPE_CHECKING, Iterator
 
@@ -65,15 +64,11 @@ ENVELOPE_DDL = (
 
 def _decode_file(path: str) -> Iterator[tuple]:
     """Multi-member gzip -> envelope tuples (one per record part)."""
-    import zlib
+    from kinesyslog_spark.sinks.records import iter_record_parts
 
     with open(path, "rb") as f:
         blob = f.read()
-    pos = 0
-    while pos < len(blob):
-        d = zlib.decompressobj(32 + 15)
-        data = d.decompress(blob[pos:])
-        rec = json.loads(data.decode("utf-8"))
+    for rec in iter_record_parts(blob):
         yield (
             rec["owner"],
             rec["logGroup"],
@@ -86,10 +81,6 @@ def _decode_file(path: str) -> Iterator[tuple]:
             ],
             os.path.basename(path),
         )
-        consumed = len(blob) - pos - len(d.unused_data)
-        if consumed <= 0:
-            break
-        pos += consumed
 
 
 def _spool_files(path: str) -> list[tuple[float, str]]:

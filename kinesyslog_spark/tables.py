@@ -7,6 +7,13 @@ returned DataFrame rather than materializing it.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import threading
+import time
+from contextlib import contextmanager
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
@@ -108,37 +115,41 @@ def _plan_size_bytes(df: DataFrame) -> int:
         return -1
 
 
-_HOT_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def hot_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """A spread + persisted table, memoized per (session, sf_dir, table).
+    """A spread + persisted table, one session artifact per (sf_dir, table).
 
     The text/vector operator family all start from the same small corpus
     table; without memoization every query re-reads the (single-row-group,
     hence single-task) parquet and re-shuffles it. One session-lifetime
-    cache makes the scan cost once-per-session — the local analog of a
+    artifact makes the scan cost once-per-session — the local analog of a
     hot table in cluster cache. Safe because testdata is immutable.
 
     BOUNDED: tables whose Catalyst size estimate exceeds
     HOT_TABLE_MAX_BYTES are returned as plain loads (no spread, no
     persist) — "persist the corpus" is a scale-killer at 100 TB, and
     re-scanning parquet beats evicting executor storage memory."""
-    key = (id(spark), sf_dir.rstrip("/"), name)
-    df = _HOT_CACHE.get(key)
-    if df is None:
+
+    def build(keep):
         df = load_table(spark, sf_dir, name)
         size = _plan_size_bytes(df)
         if size < 0 or size > HOT_TABLE_MAX_BYTES:
-            return df  # too big (or unknown): never cache, never memoize
-        df = spread(df).persist(HOT_LEVEL)
-        df.count()
-        _HOT_CACHE[key] = df
-    return df
+            raise _Oversized(df)  # too big (or unknown): never cache
+        return spread(df)
+
+    try:
+        return artifact(spark, sf_dir, f"table:{name}", build)
+    except _Oversized as big:
+        return big.df
+
+
+class _Oversized(Exception):
+    def __init__(self, df: DataFrame):
+        super().__init__("table above HOT_TABLE_MAX_BYTES")
+        self.df = df
 
 
 def hot_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized `(doc_id, toks)` over `documents` — the canonical
+    """Session artifact `(doc_id, toks)` over `documents` — the canonical
     tokenizer output (operators.text.tokens) persisted once per session.
 
     The whole text-operator family (MinHash shingling, SimHash, language
@@ -148,22 +159,20 @@ def hot_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data pipeline runs; locally it removes a repeated
     interpreted-regex pass per query. Unfiltered (empty token arrays
     kept) so every consumer can apply its own size() predicate."""
-    key = (id(spark), sf_dir.rstrip("/"), "__tokens__")
-    df = _HOT_CACHE.get(key)
-    if df is None:
+
+    def build(keep):
         from pyspark.sql import functions as F
 
         from kinesyslog_spark.operators.text import tokens
 
         docs = hot_table(spark, sf_dir, "documents")
-        df = docs.select("doc_id", tokens(F.col("text")).alias("toks")).persist(HOT_LEVEL)
-        df.count()
-        _HOT_CACHE[key] = df
-    return df
+        return docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+
+    return artifact(spark, sf_dir, "tokens", build)
 
 
 def hot_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized `(doc_id, token, tf)` unigram postings over the
+    """Session artifact `(doc_id, token, tf)`: unigram postings over the
     canonical token stream — the inverted-index projection every
     retrieval/statistics pipeline materializes once.
 
@@ -176,46 +185,40 @@ def hot_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     start from, so every downstream aggregate (global counts, document
     frequency, doc length) derives exactly: COUNT over instances ==
     SUM(tf), COUNT(DISTINCT doc_id) per token == COUNT(*) per token."""
-    key = (id(spark), sf_dir.rstrip("/"), "__postings__")
-    df = _HOT_CACHE.get(key)
-    if df is None:
+
+    def build(keep):
         from pyspark.sql import functions as F
 
-        df = (
+        return (
             hot_tokens(spark, sf_dir)
             .select("doc_id", F.explode("toks").alias("token"))
             .groupBy("doc_id", "token")
             .agg(F.count(F.lit(1)).alias("tf"))
-            .persist(HOT_LEVEL)
         )
-        df.count()
-        _HOT_CACHE[key] = df
-    return df
+
+    return artifact(spark, sf_dir, "postings", build)
 
 
 def hot_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized `(token, cnt)` corpus-wide unigram counts —
+    """Session artifact `(token, cnt)`: corpus-wide unigram counts —
     the vocabulary table (Heaps' law: orders of magnitude below the
     corpus), derived from hot_postings by one map-side-combinable
     aggregate instead of a fresh token-stream pass per consumer."""
-    key = (id(spark), sf_dir.rstrip("/"), "__vocab__")
-    df = _HOT_CACHE.get(key)
-    if df is None:
+
+    def build(keep):
         from pyspark.sql import functions as F
 
-        df = (
+        return (
             hot_postings(spark, sf_dir)
             .groupBy("token")
             .agg(F.sum("tf").alias("cnt"))
-            .persist(HOT_LEVEL)
         )
-        df.count()
-        _HOT_CACHE[key] = df
-    return df
+
+    return artifact(spark, sf_dir, "vocab", build)
 
 
 def hot_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized `(vec_id, label, emb double[], nrm)` over
+    """Session artifact `(vec_id, label, emb double[], nrm)` over
     `embeddings` — the float→double cast (an interpreted higher-order
     transform) and the L2 norm computed ONCE per session.
 
@@ -223,144 +226,288 @@ def hot_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization) starts from exactly these columns; at cluster scale
     this is the materialized vector-store projection an ANN system keeps
     hot, locally it removes a repeated per-row array pass per query."""
-    key = (id(spark), sf_dir.rstrip("/"), "__vectors__")
-    df = _HOT_CACHE.get(key)
-    if df is None:
+
+    def build(keep):
         from pyspark.sql import functions as F
 
         emb = F.transform("embedding", lambda x: x.cast("double"))
-        df = (
-            hot_table(spark, sf_dir, "embeddings")
-            .select(
-                "vec_id",
-                "label",
-                emb.alias("emb"),
-                F.sqrt(
-                    F.aggregate(
-                        F.transform(emb, lambda x: x * x),
-                        F.lit(0.0),
-                        lambda a, x: a + x,
-                    )
-                ).alias("nrm"),
-            )
-            .persist(HOT_LEVEL)
+        return hot_table(spark, sf_dir, "embeddings").select(
+            "vec_id",
+            "label",
+            emb.alias("emb"),
+            F.sqrt(
+                F.aggregate(
+                    F.transform(emb, lambda x: x * x),
+                    F.lit(0.0),
+                    lambda a, x: a + x,
+                )
+            ).alias("nrm"),
         )
-        df.count()
-        _HOT_CACHE[key] = df
-    return df
+
+    return artifact(spark, sf_dir, "vectors", build)
+
+
+# ---------------------------------------------------------------------------
+# Session-artifact registry
+# ---------------------------------------------------------------------------
+# Every corpus-derived intermediate that outlives one call (hot tables,
+# token streams, signatures, pair graphs, clusterings, budget estimates)
+# is an entry here, keyed (session, family, corpus, knobs). The registry
+# is the only code that persists such frames, so it is also the only
+# code that has to release them: release_hot is a loop over the entries.
+# Build-only intermediates go through the keep() callback handed to
+# each build and are unpersisted when the build returns or raises.
+
+
+class _Keep:
+    """keep(df): persist df at HOT_LEVEL and return it; its first action
+    materializes it. A build whose next plan reads a kept frame from two
+    subtrees (a self-join, a broadcast of it) counts the frame first, or
+    the subtrees race to compute it before the cache fills (measured
+    5-10x first-run slowdowns). keep.checkpoint(df):
+    df.localCheckpoint(eager) under the same ownership — an artifact
+    owns every checkpoint its build made (the result's lineage may read
+    them), a scratch() block drops them on exit. drop() releases every
+    frame not spared."""
+
+    def __init__(self) -> None:
+        self.frames: list[DataFrame] = []
+        self.ckpts: list[DataFrame] = []
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        df = df.persist(HOT_LEVEL)
+        self.frames.append(df)
+        return df
+
+    def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        df = df.localCheckpoint(eager)
+        self.ckpts.append(df)
+        return df
+
+    def drop(self, spare: tuple = ()) -> None:
+        for df in self.frames:
+            if not any(df is s for s in spare):
+                df.unpersist()
+        for df in self.ckpts:
+            _uncheckpoint(df)
+        self.frames, self.ckpts = [], []
+
+
+def _uncheckpoint(df: DataFrame) -> None:
+    """Free a local checkpoint's blocks: they live on the RDD under the
+    frame's LogicalRDD plan (DataFrame.unpersist does not reach them)."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
+
+
+@contextmanager
+def scratch():
+    """Call-scoped keep() for code that consumes its intermediates
+    eagerly (collects, driver-side loops): every frame kept inside the
+    block is unpersisted when the block exits, normally or by raise.
+    A frame a lazily-returned DataFrame still reads must be an
+    artifact() instead."""
+    keep = _Keep()
+    try:
+        yield keep
+    finally:
+        keep.drop()
+
+
+class _Entry:
+    __slots__ = ("value", "owned", "ckpts", "build_ms", "hits")
+
+    def __init__(self, value, owned: tuple, ckpts: list,
+                 build_ms: float) -> None:
+        self.value, self.owned, self.ckpts = value, owned, ckpts
+        self.build_ms, self.hits = build_ms, 0
+
+
+_ARTIFACTS: dict[tuple, _Entry] = {}
+_MISSES: dict[tuple, int] = {}
+_GATES: dict[tuple, threading.Lock] = {}
+_LOCK = threading.Lock()
+
+
+def _frames_of(value) -> tuple:
+    items = value if isinstance(value, tuple) else (value,)
+    return tuple(v for v in items if isinstance(v, DataFrame))
+
+
+def artifact(spark: SparkSession, sf_dir: str, family: str, build,
+             knobs: tuple = (), store: bool = False):
+    """The session artifact `family` over the corpus at sf_dir under
+    `knobs`: built once per (session, family, corpus, knobs), then
+    returned from memory until released.
+
+    `build(keep)` returns a DataFrame, a tuple (DataFrames and plain
+    values), or a plain value. Returned frames are persisted at
+    HOT_LEVEL and materialized (a returned keep.checkpoint frame is
+    already materialized); frames that another artifact already holds
+    (cached when returned, not kept here) are borrowed, not owned.
+    Frames the build passed to keep() but did not return are
+    unpersisted once it returns; its checkpoints stay with the entry.
+    On a raise every kept frame and checkpoint is released and nothing
+    is registered. Concurrent callers of one key wait for a single
+    build.
+
+    knobs carries every setting the value depends on besides the corpus
+    (budget caps, scheme versions, dials), so a re-tuned knob builds a
+    new entry instead of returning one computed under the old setting.
+
+    store=True (tuple-of-DataFrame values only) adds the opt-in disk
+    step: with SPARK_GRAFT_ARTIFACT_DIR set, a published copy is loaded
+    instead of building, and a fresh build is published (artifact_path)."""
+    key = (id(spark), family, sf_dir.rstrip("/"), tuple(knobs))
+    with _LOCK:
+        got = _ARTIFACTS.get(key)
+        if got is not None:
+            got.hits += 1
+            return got.value
+        gate = _GATES.setdefault(key, threading.Lock())
+    with gate:
+        with _LOCK:
+            got = _ARTIFACTS.get(key)
+            if got is not None:
+                got.hits += 1
+                return got.value
+            _MISSES[key] = _MISSES.get(key, 0) + 1
+        t0 = time.perf_counter()
+        path = artifact_path(sf_dir, family, knobs) if store else None
+        keep = _Keep()
+        try:
+            value = _load_stored(spark, path) if path else None
+            loaded = value is not None
+            if not loaded:
+                value = build(keep)
+            for df in _frames_of(value):
+                if not df.is_cached and not any(df is c for c in keep.ckpts):
+                    keep(df)
+            owned = tuple(
+                df for df in _frames_of(value)
+                if any(df is k for k in keep.frames)
+            )
+            for df in owned:
+                df.count()
+        except BaseException:
+            keep.drop()
+            raise
+        ckpts, keep.ckpts = keep.ckpts, []
+        keep.drop(spare=owned)
+        if path and not loaded:
+            _publish(_frames_of(value), path)
+        entry = _Entry(value, owned, ckpts, (time.perf_counter() - t0) * 1e3)
+        with _LOCK:
+            _ARTIFACTS[key] = entry
+    return value
+
+
+def artifact_inventory(spark: SparkSession) -> list[dict]:
+    """The resident artifacts of this session: family, corpus, knobs,
+    owned frame and checkpoint counts, build ms, hits and misses
+    (builds of this key)."""
+    with _LOCK:
+        return [
+            {"family": k[1], "corpus": k[2], "knobs": k[3],
+             "frames": len(e.owned), "checkpoints": len(e.ckpts),
+             "build_ms": round(e.build_ms, 1),
+             "hits": e.hits, "misses": _MISSES.get(k, 0)}
+            for k, e in _ARTIFACTS.items() if k[0] == id(spark)
+        ]
+
+
+def release_artifacts(spark: SparkSession, sf_dir: str | None = None,
+                      family: str | None = None) -> int:
+    """Forget this session's artifacts — all, one corpus's, one
+    family's, or one family over one corpus — and release the frames
+    and checkpoints they own. Returns how many were released."""
+    corpus = sf_dir.rstrip("/") if sf_dir is not None else None
+    with _LOCK:
+        dead = [
+            _ARTIFACTS.pop(k) for k in list(_ARTIFACTS)
+            if k[0] == id(spark)
+            and corpus in (None, k[2]) and family in (None, k[1])
+        ]
+    n = 0
+    for entry in dead:
+        for df in entry.owned:
+            df.unpersist()
+        for df in entry.ckpts:
+            _uncheckpoint(df)
+        n += len(entry.owned) + len(entry.ckpts)
+    return n
 
 
 def release_hot(spark: SparkSession, sf_dir: str | None = None) -> int:
-    """Unpersist (and forget) the session-memoized hot tables — all of
-    them, or only one sf_dir's.
+    """Unpersist (and forget) the session artifacts — all of them, or
+    only one sf_dir's.
 
     Long-lived sessions that sweep many datasets accumulate persisted
     blocks (hot tables, tokens, vectors, IVF centroids) that the block
     manager then scans/evicts around; a 60-query run measured a 4x
     slowdown on an iterative query purely from that pressure. Call this
     when a dataset's query family is done. Next access rebuilds."""
-    from kinesyslog_spark.queries.ann import _IVF_CACHE
-    from kinesyslog_spark.queries.cluster import _CLUSTER_CACHE
-    from kinesyslog_spark.queries.dedup import (
-        _MH_PAIR_CACHE,
-        _NGRAM_CACHE,
-        _SHINGLE_CACHE,
-        _SIG_CACHE,
-        _SIMHASH_CACHE,
-    )
-    from kinesyslog_spark.queries.imagehash import _PHASH_CACHE
-    from kinesyslog_spark.queries.imageresolve import (
-        _IMG_COMP_CACHE,
-        _IMG_PAIR_CACHE,
-    )
-    from kinesyslog_spark.queries.govern import _REFINE_CACHE
-    from kinesyslog_spark.queries.graph import _PR_CACHE, _PR_CACHE_N
-    from kinesyslog_spark.queries.graph_ext import _TRI_CACHE, _TRI_CACHE_N
-    from kinesyslog_spark.queries.resolution import _RANK_CACHE
-    from kinesyslog_spark.queries.simresolve import (
-        _SIM_COMP_CACHE,
-        _SIM_PAIR_CACHE,
-    )
-    from kinesyslog_spark.queries.semantic import _CENTROID_CACHE, _KMEANS_CACHE
-
-    for key in list(_CENTROID_CACHE):  # plain lists, no unpersist needed
-        if key[0] == id(spark) and (sf_dir is None or key[1] == sf_dir.rstrip("/")):
-            _CENTROID_CACHE.pop(key)
-    from kinesyslog_spark.queries.dedup import _SLOT_EST_CACHE
-
-    # plain (adm, cap) ints, but keyed on id(spark) — CPython can reuse
-    # the id after the old session is GC'd, so stale entries must go
-    # with the session like every other memo. Corpus key is key[2]
-    # (key = (spark_id, family, corpus_key, cap, rows)); the ngram
-    # family folds its rows dial into the corpus key as a
-    # (sf_dir, rows) TUPLE, so match either shape.
-    def _corpus_match(ck, sf: str) -> bool:
-        if isinstance(ck, tuple):
-            return bool(ck) and ck[0] == sf
-        return ck == sf
-
-    for key in list(_SLOT_EST_CACHE):
-        if key[0] == id(spark) and (
-            sf_dir is None or _corpus_match(key[2], sf_dir.rstrip("/"))
-        ):
-            _SLOT_EST_CACHE.pop(key)
-    # Scalar side-tables of the graph memos (node/edge counts) go with
-    # their DataFrame entries — same key shape (spark_id, sf_dir, ...).
-    for meta in (_PR_CACHE_N, _TRI_CACHE_N):
-        for key in list(meta):
-            if key[0] == id(spark) and (
-                sf_dir is None or key[1] == sf_dir.rstrip("/")
-            ):
-                meta.pop(key)
-    n = 0
-    for cache in (_HOT_CACHE, _IVF_CACHE, _KMEANS_CACHE, _SIG_CACHE,
-                  _SIMHASH_CACHE, _CLUSTER_CACHE, _PHASH_CACHE,
-                  _IMG_PAIR_CACHE, _SIM_PAIR_CACHE, _MH_PAIR_CACHE,
-                  _NGRAM_CACHE, _RANK_CACHE, _IMG_COMP_CACHE,
-                  _SIM_COMP_CACHE, _REFINE_CACHE, _PR_CACHE, _TRI_CACHE,
-                  _SHINGLE_CACHE):
-        for key in list(cache):
-            if key[0] != id(spark):
-                continue
-            if sf_dir is not None and key[1] != sf_dir.rstrip("/"):
-                continue
-            entry = cache.pop(key)
-            dfs = entry if isinstance(entry, tuple) else (entry,)
-            for df in dfs:
-                try:
-                    df.unpersist()
-                    n += 1
-                except Exception:
-                    pass
-    return n
+    return release_artifacts(spark, sf_dir)
 
 
-def persist_now(df: DataFrame) -> DataFrame:
-    """Persist AND materialize (cheap count action) an intermediate that
-    multiple plan subtrees will read.
+def artifact_path(sf_dir: str, family: str, knobs: tuple = ()) -> str | None:
+    """Disk location of a stored artifact, or None when the disk store
+    is disabled (the default).
 
-    Lazy persist is not enough when a self-join or broadcast build
-    duplicates the producing subtree: the broadcast-exchange jobs and the
-    main stages race, each recomputing the expensive pipeline before the
-    cache is populated (measured 5-10x first-run slowdowns). Materializing
-    once up front costs one tiny job and makes every consumer a cache
-    read. Use only for intermediates that are small relative to the
-    corpus (signatures, candidate pairs, profiles)."""
-    df = df.persist()
-    df.count()
-    return df
+    Stored families (SimHash (grp, blk), shingles, MinHash signatures)
+    are pure functions of the corpus and their knobs, and building them
+    is the dominant cost of a FRESH session's first family query (q27
+    sf10: ~100 s of the 160 s fresh run; q26 sf1: ~15 s of 17.7 s).
+    Like a production IVF index, a deployment can keep them on disk
+    keyed by corpus — a fresh session then pays parquet IO, not
+    recompute. The key folds in the documents.parquet file stat
+    (size + mtime), so a regenerated dataset at the same path misses
+    cleanly, and the family's knobs (scheme version + dial constants),
+    so a code change never reads a stale layout.
+
+    OPT-IN ONLY (OPTIMIZATION_r12): the store requires an explicit
+    SPARK_GRAFT_ARTIFACT_DIR path. A default-on disk store would carry
+    computed intermediates across independent engine invocations, which
+    makes a fresh-session benchmark silently *not fresh* — every bench
+    or correctness run must compute from the parquet inputs alone. The
+    feature stays available for long-lived deployments that want an
+    index; measurement paths never set the variable."""
+    base = (os.environ.get("SPARK_GRAFT_ARTIFACT_DIR") or "").strip()
+    if not base or base in ("0", "off", "none"):
+        return None
+    try:
+        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    except OSError:
+        return None
+    key = hashlib.sha1(
+        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}"
+        f"|{family}|{tuple(knobs)!r}".encode()
+    ).hexdigest()[:16]
+    return os.path.join(base, family, key)
 
 
-def persist_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """persist_now variant that returns the materializing count.
+def _load_stored(spark: SparkSession, path: str) -> tuple | None:
+    """The frames of a PUBLISHED artifact dir, in stored order; None if
+    absent or half-written."""
+    if not os.path.exists(os.path.join(path, "_PUBLISHED")):
+        return None
+    names = sorted(n for n in os.listdir(path) if n.isdigit())
+    return tuple(spark.read.parquet(os.path.join(path, n)) for n in names)
 
-    For callers whose plan branches on the intermediate's size (e.g.
-    q140's conditional adjacency broadcast): the count that populates
-    the cache IS the size signal, so exposing it avoids paying a second
-    full scan of the cached partitions just to re-derive it."""
-    df = df.persist()
-    n = df.count()
-    return df, n
+
+def _publish(frames: tuple, path: str) -> None:
+    """Best-effort atomic publish: write into a tmp dir, rename into
+    place, marker last. A concurrent writer losing the rename race just
+    discards its tmp; readers only trust _PUBLISHED."""
+    tmp = f"{path}.tmp-{os.getpid()}"
+    try:
+        for i, df in enumerate(frames):
+            df.write.mode("overwrite").parquet(os.path.join(tmp, str(i)))
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        os.rename(tmp, path)
+        with open(os.path.join(path, "_PUBLISHED"), "w") as f:
+            f.write("1\n")
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

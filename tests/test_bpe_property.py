@@ -22,7 +22,6 @@ from hypothesis import strategies as st
 
 from kinesyslog_spark.queries.tokenizer import (
     BPE_ROUNDS,
-    _MERGES_CACHE,
     q83_bpe_merges,
     q109_bpe_encode,
 )
@@ -89,7 +88,7 @@ def test_bpe_matches_python_model(spark, tmp_path_factory, docs):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
-    from kinesyslog_spark.tables import release_hot
+    from kinesyslog_spark.tables import artifact_inventory, release_hot
 
     sf_dir = str(tmp)
     try:
@@ -101,7 +100,9 @@ def test_bpe_matches_python_model(spark, tmp_path_factory, docs):
         }
     finally:
         release_hot(spark, sf_dir)
-        _MERGES_CACHE.clear()
+    # the trained merge table goes with its corpus's other artifacts
+    assert not [a for a in artifact_inventory(spark)
+                if a["corpus"] == sf_dir.rstrip("/")]
 
     want_merges, want_enc = _model(docs)
     assert got_merges == want_merges

@@ -94,6 +94,46 @@ def test_q38_mapinarrow_plan_and_pandas_parity(spark, sf_dir):
     assert got, "planted rows must produce at least one candidate pair"
 
 
+def test_q38_arrow_kernel_honours_sliced_batches():
+    """A sliced RecordBatch keeps its list column's offsets: the kernel
+    must read each row's own vector (list-array flatten), not the child
+    buffer from element 0 — otherwise every GEMM vector misaligns."""
+    import numpy as np
+    import pyarrow as pa
+
+    from kinesyslog_spark.queries.ann import _q38_block_pairs_arrow
+
+    rng = np.random.default_rng(5)
+    dim, pad = 8, 7
+    qs = [rng.integers(-1000, 1000, size=dim, dtype=np.int64)
+          for _ in range(pad + 24)]
+    roles = [0] * pad + [0] * 12 + [1] * 12
+
+    def batch(lo):
+        return pa.RecordBatch.from_pydict({
+            "bi": pa.array([0] * (len(qs) - lo), pa.int32()),
+            "bj": pa.array([0] * (len(qs) - lo), pa.int32()),
+            "role": pa.array(roles[lo:], pa.int32()),
+            "vec_id": pa.array(range(lo, len(qs)), pa.int64()),
+            "q": pa.array([list(q) for q in qs[lo:]], pa.list_(pa.int64())),
+            "n2": pa.array([int((q * q).sum()) for q in qs[lo:]], pa.int64()),
+        })
+
+    def pairs(b):
+        got = []
+        for out in _q38_block_pairs_arrow(iter([b])):
+            t = out.to_pydict()
+            got += list(zip(t["vec_a"], t["vec_b"], t["dot"],
+                            t["n2a"], t["n2b"]))
+        return sorted(got)
+
+    sliced = batch(0).slice(pad)
+    assert sliced.column("q").offset == pad
+    want = pairs(batch(pad))
+    assert want, "the 12x12 block must produce candidate pairs"
+    assert pairs(sliced) == want
+
+
 def _q78_rows(spark, sf_dir):
     from kinesyslog_spark.queries import QUERIES
 

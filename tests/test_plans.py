@@ -198,7 +198,7 @@ def test_q72_pagerank_broadcast_gate_both_shapes(spark, sf_dir):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        # persist_now frames from EARLIER tests (built with default
+        # persisted frames from EARLIER tests (built with default
         # confs) would be CacheManager-substituted into these plans,
         # leaking their compiled broadcasts into the walk — clear all.
         spark.catalog.clearCache()

@@ -7,11 +7,8 @@ from pyspark.sql import functions as F
 
 from kinesyslog_spark.queries import QUERIES
 from kinesyslog_spark.queries.pipeline_ops import misra_gries_candidates
-from kinesyslog_spark.queries.semantic import (
-    KMEANS_K,
-    _KMEANS_CACHE,
-    kmeans_assignments,
-)
+from kinesyslog_spark.queries.semantic import KMEANS_K, kmeans_assignments
+from kinesyslog_spark.tables import release_artifacts
 
 
 def test_misra_gries_superset_guarantee(spark):
@@ -54,9 +51,8 @@ def test_q79_matches_plain_groupby(spark, sf_dir):
 
 def test_kmeans_deterministic_and_total(spark, sf_dir):
     a1 = {(r.vec_id, r.cid) for r in kmeans_assignments(spark, sf_dir).collect()}
-    # drop the memo so the second run recomputes from scratch
-    for key in [k for k in _KMEANS_CACHE if k[0] == id(spark)]:
-        _KMEANS_CACHE.pop(key).unpersist()
+    # drop the artifact so the second run recomputes from scratch
+    assert release_artifacts(spark, sf_dir, family="kmeans") >= 1
     a2 = {(r.vec_id, r.cid) for r in kmeans_assignments(spark, sf_dir).collect()}
     assert a1 == a2, "k-means assignment must be run-to-run deterministic"
     from kinesyslog_spark.tables import hot_vectors

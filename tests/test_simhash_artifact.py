@@ -8,8 +8,21 @@ import os
 
 import pytest
 
+from kinesyslog_spark import tables
 from kinesyslog_spark.queries import dedup
 from kinesyslog_spark.tables import release_hot
+
+
+def _simhash_path(sf_dir):
+    return tables.artifact_path(sf_dir, "simhash_groups",
+                                dedup._simhash_knobs())
+
+
+def _minhash_path(sf_dir):
+    return tables.artifact_path(
+        sf_dir, "minhash_sigs",
+        (dedup.MINHASH_ARTIFACT_V, dedup.MINHASH_K, 3),
+    )
 
 
 def _frames_equal(a, b, key):
@@ -28,7 +41,7 @@ def test_simhash_artifact_roundtrip_parity(spark, sf_dir, tmp_path,
     release_hot(spark, sf_dir)
     try:
         grp0, blk0 = dedup.hot_simhash_groups(spark, sf_dir)
-        apath = dedup._simhash_artifact_path(sf_dir)
+        apath = _simhash_path(sf_dir)
         assert apath is not None
         assert os.path.exists(os.path.join(apath, "_PUBLISHED"))
         pairs0 = sorted(
@@ -54,21 +67,21 @@ def test_simhash_artifact_key_tracks_corpus_and_scheme(tmp_path,
     sf.mkdir()
     doc = sf / "documents.parquet"
     doc.write_bytes(b"x" * 64)
-    p1 = dedup._simhash_artifact_path(str(sf))
+    p1 = _simhash_path(str(sf))
     assert p1 is not None
     # regenerated corpus (different mtime) -> different key
     os.utime(doc, ns=(1, 2))
-    p2 = dedup._simhash_artifact_path(str(sf))
+    p2 = _simhash_path(str(sf))
     assert p2 != p1
     # scheme version bump -> different key
     monkeypatch.setattr(dedup, "SIMHASH_ARTIFACT_V", 999)
-    assert dedup._simhash_artifact_path(str(sf)) not in (p1, p2)
+    assert _simhash_path(str(sf)) not in (p1, p2)
     # kill switch
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", "0")
-    assert dedup._simhash_artifact_path(str(sf)) is None
+    assert _simhash_path(str(sf)) is None
     # missing corpus file -> no artifact (never a bogus key)
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "cache"))
-    assert dedup._simhash_artifact_path(str(tmp_path / "nope")) is None
+    assert _simhash_path(str(tmp_path / "nope")) is None
 
 
 def test_simhash_artifact_unpublished_dir_is_ignored(spark, sf_dir,
@@ -76,9 +89,9 @@ def test_simhash_artifact_unpublished_dir_is_ignored(spark, sf_dir,
     """A half-written artifact (no _PUBLISHED marker) must be treated
     as absent, not read."""
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "cache"))
-    apath = dedup._simhash_artifact_path(sf_dir)
-    os.makedirs(os.path.join(apath, "grp"))
-    assert dedup._simhash_artifact_load(spark, apath) is None
+    apath = _simhash_path(sf_dir)
+    os.makedirs(os.path.join(apath, "0"))
+    assert tables._load_stored(spark, apath) is None
 
 
 def test_artifact_store_is_opt_in(tmp_path, monkeypatch):
@@ -90,13 +103,13 @@ def test_artifact_store_is_opt_in(tmp_path, monkeypatch):
     sf.mkdir()
     (sf / "documents.parquet").write_bytes(b"x" * 64)
     monkeypatch.delenv("SPARK_GRAFT_ARTIFACT_DIR", raising=False)
-    assert dedup.family_artifact_path(str(sf), "minhash", "v1") is None
-    assert dedup._simhash_artifact_path(str(sf)) is None
+    assert tables.artifact_path(str(sf), "minhash_sigs", (1,)) is None
+    assert _simhash_path(str(sf)) is None
     for off in ("0", "off", "none", "", "  "):
         monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", off)
-        assert dedup.family_artifact_path(str(sf), "minhash", "v1") is None
+        assert tables.artifact_path(str(sf), "minhash_sigs", (1,)) is None
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "c"))
-    assert dedup.family_artifact_path(str(sf), "minhash", "v1") is not None
+    assert tables.artifact_path(str(sf), "minhash_sigs", (1,)) is not None
 
 
 def test_minhash_artifact_roundtrip_parity(spark, sf_dir, tmp_path,
@@ -111,10 +124,7 @@ def test_minhash_artifact_roundtrip_parity(spark, sf_dir, tmp_path,
         pairs0 = sorted(
             map(tuple, dedup.q26_minhash_lsh(spark, sf_dir).collect())
         )
-        apath = dedup.family_artifact_path(
-            sf_dir, "minhash",
-            f"v{dedup.MINHASH_ARTIFACT_V}|k={dedup.MINHASH_K}|shingle=3",
-        )
+        apath = _minhash_path(sf_dir)
         assert os.path.exists(os.path.join(apath, "_PUBLISHED"))
         release_hot(spark, sf_dir)
         sh1, sigs1 = dedup.hot_shingle_sigs(spark, sf_dir)

@@ -521,47 +521,55 @@ def test_ngram_candidates_frame_derives_rows(spark, sf_dir):
         NGRAM_ROWS,
         ngram_candidates_frame,
     )
-    from kinesyslog_spark.tables import load_table
+    from kinesyslog_spark.tables import load_table, scratch
 
     big = spark.range(500_000).select(
         F.col("id").alias("doc_id"),
         F.format_string("doc%06dxx", F.col("id")).alias("text"),
     )
-    cand, base, rows = ngram_candidates_frame(big)
-    assert rows == 4
-    base.unpersist()
+    with scratch() as keep:
+        cand, base, rows = ngram_candidates_frame(big, keep)
+        assert rows == 4
 
     docs = load_table(spark, sf_dir, "documents")
-    cand, base, rows = ngram_candidates_frame(docs)
-    assert rows == 3 == NGRAM_ROWS
-    # same candidate pairs as the registered q28 blocking at this scale
-    assert cand.count() > 0
-    base.unpersist()
+    with scratch() as keep:
+        cand, base, rows = ngram_candidates_frame(docs, keep)
+        assert rows == 3 == NGRAM_ROWS
+        # same candidate pairs as the registered q28 blocking at this scale
+        assert cand.count() > 0
 
 
 def test_release_hot_clears_ngram_tuple_corpus_keys(spark):
-    """ADVICE r11 (tables.py): the ngram family folds its rows dial
-    into the slot-estimate corpus key as a (sf_dir, rows) tuple; a
-    targeted release_hot(spark, sf_dir) must clear those entries too."""
-    from kinesyslog_spark.queries.dedup import _SLOT_EST_CACHE
-    from kinesyslog_spark.tables import release_hot
+    """ADVICE r11 (tables.py): the ngram family's slot estimates carry
+    their rows dial (now in the estimate's family name, once a
+    (sf_dir, rows) tuple corpus key); a targeted
+    release_hot(spark, sf_dir) must clear those entries too, and only
+    that corpus's."""
+    from kinesyslog_spark.tables import (
+        artifact,
+        artifact_inventory,
+        release_artifacts,
+        release_hot,
+    )
 
     sf, other = "/tmp/slotest-corpus-a", "/tmp/slotest-corpus-b"
-    k_tuple = (id(spark), "ngram_bands", (sf, 4096), 64, 4096)
-    k_plain = (id(spark), "minhash_bands", sf, 64, 4096)
-    k_other = (id(spark), "ngram_bands", (other, 4096), 64, 4096)
-    _SLOT_EST_CACHE[k_tuple] = (1, 0)
-    _SLOT_EST_CACHE[k_plain] = (2, 0)
-    _SLOT_EST_CACHE[k_other] = (3, 0)
+    ngram, plain = "slots:ngram_bands:rows=4096", "slots:minhash_bands"
+    artifact(spark, sf, ngram, lambda keep: (1, 0), knobs=(64,))
+    artifact(spark, sf, plain, lambda keep: (2, 0), knobs=(64,))
+    artifact(spark, other, ngram, lambda keep: (3, 0), knobs=(64,))
+
+    def resident():
+        return {(a["family"], a["corpus"])
+                for a in artifact_inventory(spark)}
+
     try:
         release_hot(spark, sf)
-        assert k_tuple not in _SLOT_EST_CACHE, (
-            "tuple-keyed ngram estimate survived targeted release"
+        assert (ngram, sf) not in resident(), (
+            "rows-dial ngram estimate survived targeted release"
         )
-        assert k_plain not in _SLOT_EST_CACHE
-        assert k_other in _SLOT_EST_CACHE, (
+        assert (plain, sf) not in resident()
+        assert (ngram, other) in resident(), (
             "targeted release must not clear other corpora"
         )
     finally:
-        for k in (k_tuple, k_plain, k_other):
-            _SLOT_EST_CACHE.pop(k, None)
+        release_artifacts(spark, other)

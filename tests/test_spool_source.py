@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 
 pytest.importorskip("pyspark.sql.datasource")
 
-from kinesyslog_spark.sinks.records import spool_batch  # noqa: E402
+from kinesyslog_spark.sinks.records import (  # noqa: E402
+    _compress,
+    spool_batch,
+    spool_write,
+)
 from kinesyslog_spark.sources.spool_source import (  # noqa: E402
     SpoolDataSource,
     register_spool_source,
@@ -39,6 +43,17 @@ def test_batch_read_round_trips(registered, tmp_path):
     spark = registered
     spool_dir = str(tmp_path / "spool")
     spool_batch(_events(spark), spool_dir)
+    # plus one file of two concatenated gzip members (a split record,
+    # or a Firehose object): both members must decode
+    members = [
+        {"owner": "kinesyslog", "logGroup": "kinesyslog/syslog/514",
+         "logStream": "10.0.0.9", "subscriptionFilters": [],
+         "messageType": "DATA_MESSAGE",
+         "logEvents": [{"id": f"{9000 + i:056d}", "timestamp": 1700000009000 + i,
+                        "message": f"member {i}"}]}
+        for i in range(2)
+    ]
+    spool_write(b"".join(_compress(m) for m in members), spool_dir)
 
     df = spark.read.format("kinesyslogspool").load(spool_dir)
     flat = df.select(F.explode("logEvents").alias("e")).select(
@@ -47,6 +62,8 @@ def test_batch_read_round_trips(registered, tmp_path):
     )
     got = {(r["id"], r["ts_ms"], r["message"]) for r in flat.collect()}
     want = {(r["id"], r["ts_ms"], r["message"]) for r in _events(spark).collect()}
+    want |= {(e["id"], e["timestamp"], e["message"])
+             for m in members for e in m["logEvents"]}
     assert got == want
     # provenance column present
     assert df.select("src_file").distinct().count() >= 1

@@ -58,15 +58,14 @@ def test_hot_table_refuses_oversized_tables(spark, sf_dir, monkeypatch):
     'persist the corpus' can never fire at scale."""
     import kinesyslog_spark.tables as T
 
-    # drop any memo from earlier tests — the gate applies at build time
-    key = (id(spark), sf_dir.rstrip("/"), "embeddings")
-    cached = T._HOT_CACHE.pop(key, None)
-    if cached is not None:
-        cached.unpersist()
+    # drop any artifact from earlier tests — the gate applies at build time
+    T.release_artifacts(spark, sf_dir, family="table:embeddings")
     monkeypatch.setattr(T, "HOT_TABLE_MAX_BYTES", 1)  # force 'too big'
     df = T.hot_table(spark, sf_dir, "embeddings")
     assert not df.is_cached
-    assert (id(spark), sf_dir.rstrip("/"), "embeddings") not in T._HOT_CACHE
+    assert not [a for a in T.artifact_inventory(spark)
+                if a["family"] == "table:embeddings"
+                and a["corpus"] == sf_dir.rstrip("/")]
     # still a correct load
     assert df.select(F.count("*")).collect()[0][0] > 0
 
@@ -111,13 +110,17 @@ def test_hot_vocab_matches_global_counts(spark, sf_dir):
 
 def test_release_hot_drops_postings(spark, sf_dir):
     """release_hot must evict the postings/vocab artifacts with the rest
-    of the hot layer (they live in _HOT_CACHE under the sf_dir key)."""
+    of the hot layer (they are registry entries under the sf_dir key)."""
     import kinesyslog_spark.tables as T
 
-    T.hot_vocab(spark, sf_dir)  # builds postings too
-    keys = [k for k in T._HOT_CACHE
-            if k[0] == id(spark) and k[2] in ("__postings__", "__vocab__")]
-    assert len(keys) == 2
+    def resident():
+        return [a for a in T.artifact_inventory(spark)
+                if a["corpus"] == sf_dir.rstrip("/")
+                and a["family"] in ("postings", "vocab")]
+
+    post = T.hot_postings(spark, sf_dir)
+    vocab = T.hot_vocab(spark, sf_dir)
+    assert len(resident()) == 2
     T.release_hot(spark, sf_dir)
-    assert not [k for k in T._HOT_CACHE
-                if k[0] == id(spark) and k[2] in ("__postings__", "__vocab__")]
+    assert not resident()
+    assert not post.is_cached and not vocab.is_cached

@@ -60,7 +60,7 @@ def main() -> None:
         "",
         "Notes:",
         "- Counts reflect the EXECUTED plan tree: AQE/query-stage shells",
-        "  unwrapped, each cached (persist_now) build counted once. The",
+        "  unwrapped, each cached (session artifact) build counted once. The",
         "  iterative queries (q40 pointer-jumping CC, q72 PageRank) report",
         "  what actually runs — q40's checkpointed rounds live behind RDD",
         "  scan boundaries, q72 shows its real per-iteration exchanges.",

@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from kinesyslog_spark.session import get_spark  # noqa: E402
-from kinesyslog_spark.tables import load_table, persist_now  # noqa: E402
+from kinesyslog_spark.tables import load_table, scratch  # noqa: E402
 
 
 def _q38_block_pairs_arrow(it):
@@ -111,66 +111,67 @@ def main() -> None:
         F.col("embedding").cast("array<double>"),
         lambda v: F.floor(v * _Q38_CQ).cast("long"),
     )
-    base = persist_now(
-        emb.select("vec_id", qx.alias("q")).withColumn(
-            "n2",
-            F.aggregate("q", F.lit(0).cast("long"), lambda a, x: a + x * x),
+    with scratch() as keep:
+        base = keep(
+            emb.select("vec_id", qx.alias("q")).withColumn(
+                "n2",
+                F.aggregate("q", F.lit(0).cast("long"), lambda a, x: a + x * x),
+            )
         )
-    )
-    n_vec = base.count()
-    nb = max(1, -(-n_vec // _Q38_BLOCK))
-    blk = F.pmod(F.hash("vec_id"), F.lit(nb)).cast("int")
-    tagged = base.withColumn("blk", blk)
-    bi = spark.range(nb).select(F.col("id").cast("int").alias("bi"))
-    bj = spark.range(nb).select(F.col("id").cast("int").alias("bj"))
-    pair_list = bi.join(bj, F.col("bi") <= F.col("bj"))
+        n_vec = base.count()
+        nb = max(1, -(-n_vec // _Q38_BLOCK))
+        blk = F.pmod(F.hash("vec_id"), F.lit(nb)).cast("int")
+        tagged = base.withColumn("blk", blk)
+        bi = spark.range(nb).select(F.col("id").cast("int").alias("bi"))
+        bj = spark.range(nb).select(F.col("id").cast("int").alias("bj"))
+        pair_list = bi.join(bj, F.col("bi") <= F.col("bj"))
 
-    def sides(role_a, role_b):
-        a_side = tagged.join(
-            F.broadcast(pair_list), tagged.blk == pair_list.bi
-        ).select("bi", "bj", role_a.alias("role"), "vec_id", "q", "n2")
-        b_side = tagged.join(
-            F.broadcast(pair_list), tagged.blk == pair_list.bj
-        ).select("bi", "bj", role_b.alias("role"), "vec_id", "q", "n2")
-        return a_side.unionAll(b_side)
+        def sides(role_a, role_b):
+            a_side = tagged.join(
+                F.broadcast(pair_list), tagged.blk == pair_list.bi
+            ).select("bi", "bj", role_a.alias("role"), "vec_id", "q", "n2")
+            b_side = tagged.join(
+                F.broadcast(pair_list), tagged.blk == pair_list.bj
+            ).select("bi", "bj", role_b.alias("role"), "vec_id", "q", "n2")
+            return a_side.unionAll(b_side)
 
-    par = spark.sparkContext.defaultParallelism
+        par = spark.sparkContext.defaultParallelism
 
-    def variant_a():
-        return (
-            sides(F.lit("a"), F.lit("b"))
-            .groupBy("bi", "bj")
-            .applyInPandas(_q38_block_pairs, _Q38_PAIR_SCHEMA)
+        def variant_a():
+            return (
+                sides(F.lit("a"), F.lit("b"))
+                .groupBy("bi", "bj")
+                .applyInPandas(_q38_block_pairs, _Q38_PAIR_SCHEMA)
+            )
+
+        def variant_b():
+            return (
+                sides(F.lit(0), F.lit(1))
+                .repartition(max(par, nb * (nb + 1) // 2), "bi", "bj")
+                .mapInArrow(_q38_block_pairs_arrow, _Q38_PAIR_SCHEMA)
+            )
+
+        # correctness first: identical pair sets
+        rows_a = sorted(
+            (r.vec_a, r.vec_b, r.dot, r.n2a, r.n2b) for r in variant_a().collect()
         )
-
-    def variant_b():
-        return (
-            sides(F.lit(0), F.lit(1))
-            .repartition(max(par, nb * (nb + 1) // 2), "bi", "bj")
-            .mapInArrow(_q38_block_pairs_arrow, _Q38_PAIR_SCHEMA)
+        rows_b = sorted(
+            (r.vec_a, r.vec_b, r.dot, r.n2a, r.n2b) for r in variant_b().collect()
         )
+        assert rows_a == rows_b, (
+            f"MISMATCH: {len(rows_a)} vs {len(rows_b)} pairs"
+        )
+        print(f"parity OK ({len(rows_a)} pairs)")
 
-    # correctness first: identical pair sets
-    rows_a = sorted(
-        (r.vec_a, r.vec_b, r.dot, r.n2a, r.n2b) for r in variant_a().collect()
-    )
-    rows_b = sorted(
-        (r.vec_a, r.vec_b, r.dot, r.n2a, r.n2b) for r in variant_b().collect()
-    )
-    assert rows_a == rows_b, (
-        f"MISMATCH: {len(rows_a)} vs {len(rows_b)} pairs"
-    )
-    print(f"parity OK ({len(rows_a)} pairs)")
-
-    for label, fn in (("A applyInPandas", variant_a),
-                      ("B mapInArrow   ", variant_b)):
-        samples = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        print(f"{label}: median {statistics.median(samples):.3f}s "
-              f"of {['%.3f' % s for s in samples]}")
+        for label, fn in (("A applyInPandas", variant_a),
+                          ("B mapInArrow   ", variant_b)):
+            samples = []
+            for _ in range(5):
+                t0 = time.perf_counter()
+                fn().write.format("noop").mode("overwrite").save()
+                samples.append(time.perf_counter() - t0)
+            print(f"{label}: median {statistics.median(samples):.3f}s "
+                  f"of {['%.3f' % s for s in samples]}")
 
 
 if __name__ == "__main__":
