@@ -5,7 +5,8 @@ Python enters only where the semantics demand it, always Arrow-batched:
 
 - scalar pandas UDF ........ operators/framing.py (zlib/gzip decompress,
                              lossy-decode parity)
-- grouped-map applyInPandas  sinks/records.py (record build + split)
+- grouped-map applyInPandas  operators/framing.py (stream reframing)
+- mapInArrow ............... sinks/records.py (record JSON + gzip + split)
 - mapInPandas .............. operators/multimodal.py, sinks/records.py
 - applyInPandasWithState ... streaming/state.py (chunk reassembly)
 - grouped-agg pandas UDF ... THIS MODULE: `gmean_udaf` — a custom

@@ -49,8 +49,6 @@ from kinesyslog_spark.operators.text import (
     TOKEN_RE,
     jaccard,
     lsh_band_keys,
-    minhash_df,
-    word_shingles,
 )
 from kinesyslog_spark.queries import query
 from kinesyslog_spark.queries.dedup import (

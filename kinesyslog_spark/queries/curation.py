@@ -40,7 +40,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kinesyslog_spark.operators.ranking import small_frame_rank
 from kinesyslog_spark.queries import query

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kinesyslog_spark.operators.localframe import local_frame
 from kinesyslog_spark.operators.ranking import exact_rank_values

@@ -25,7 +25,7 @@ from kinesyslog_spark.operators.framing import (
     gelf_format,
 )
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import hot_table, load_table
+from kinesyslog_spark.tables import hot_table
 
 N_CONNS = 50
 CHUNK_BYTES = 64

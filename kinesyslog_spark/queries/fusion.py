@@ -46,7 +46,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from kinesyslog_spark.operators.ranking import small_frame_rank
 from kinesyslog_spark.queries import query

@@ -60,7 +60,6 @@ Scale posture (100 TB of images):
 from __future__ import annotations
 
 import hashlib
-import os
 from collections import Counter
 from collections.abc import Iterator
 
@@ -75,7 +74,6 @@ from kinesyslog_spark.operators.png import (
     decode_png,
     dct_table_sql_values,
     encode_png,
-    phash_blocks,
     to_gray,
 )
 from kinesyslog_spark.queries import query

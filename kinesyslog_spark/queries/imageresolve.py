@@ -31,7 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from kinesyslog_spark.queries import ORACLE, query
 from kinesyslog_spark.queries.cluster import connected_components

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window as W
 
 from kinesyslog_spark.operators.topk import topk_per_key
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import hot_table, hot_vectors, load_table
+from kinesyslog_spark.tables import hot_table, hot_vectors
 
 EMB_DIM = 64
 N_PROBES = 10

@@ -44,7 +44,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.queries.ann import _ORACLE_DOT, _dot
 from kinesyslog_spark.tables import artifact, hot_vectors
 
 KMEANS_K = 8

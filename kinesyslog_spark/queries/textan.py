@@ -22,7 +22,7 @@ from pyspark.sql.window import Window as W
 
 from kinesyslog_spark.operators.text import char_grams, winnow_fingerprints
 from kinesyslog_spark.queries import query
-from kinesyslog_spark.tables import artifact, hot_table, load_table
+from kinesyslog_spark.tables import artifact, hot_table
 
 PROFILE_TOP_N = 20
 TRIGRAM_N = 3

@@ -26,8 +26,9 @@ def get_spark(app_name: str = "kinesyslog_spark", cpus: str | int | None = None,
     - AQE enabled: coalesces small shuffle partitions, splits skewed ones,
       converts sort-merge joins to broadcast at runtime when a side turns
       out small.
-    - Arrow enabled with a large batch size: the few pandas UDFs we use
-      (gzip record packing, minhash) amortize per-batch overhead.
+    - Arrow enabled with a large batch size: the few Python UDFs we use
+      (mapInArrow record serialization, pandas minhash) amortize
+      per-batch overhead.
     - parquet timestamps read as TIMESTAMP_LTZ with session UTC so epoch
       extraction matches a DuckDB oracle reading the same files.
     """

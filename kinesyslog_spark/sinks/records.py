@@ -6,11 +6,17 @@ Pipeline (sink.py:141-217 re-expressed Spark-first):
    the CloudWatch-Logs-subscription-shaped Record (sink.py:194-209,
    README.md:96-132). Pure DataFrame ops; the shuffle key is the
    reference's own grouping key.
-2. `serialize_records` — grouped-map pandas: to JSON + gzip level 9
+2. `serialize_records` — mapInArrow over the envelope rows, which
+   already hold one (logGroup, logStream) each, so no second shuffle:
+   `record_payloads` fixes the key order and gzips the JSON at level 9
    (sink.py:211-217); records whose compressed size exceeds 1000 KB are
    split into ⌈size/max⌉ even event-slices and re-compressed
    (sink.py:167-183 — including its 'naively hopes' even-split policy).
-3. `write_spool` — K1 atomic publish: write temp file, hard-link to the
+   Every envelope→payload path (this one, `spool_batch`, the
+   `kinesyslogspool` writer) goes through `record_payloads`, and every
+   spool blob→envelope path (`read_spool`, `s3_read_spool`, the
+   `kinesyslogspool` reader) through `envelope_rows`.
+3. `spool_write` — K1 atomic publish: write temp file, hard-link to the
    final name, unlink temp (spool.py:25-36); readers never observe a
    partial record.
 4. `read_spool` / `iter_record_parts` — E3-compatible read-back: a spool
@@ -30,9 +36,10 @@ import os
 import tempfile
 import uuid
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,7 +57,20 @@ ENVELOPE_SCHEMA = (
     "logEvents array<struct<id: string, timestamp: long, message: string>>"
 )
 
+# Canonical JSON key order of a record and of each of its events.
+ENVELOPE_FIELDS = (
+    "owner", "logGroup", "logStream", "subscriptionFilters", "messageType",
+    "logEvents",
+)
+EVENT_FIELDS = ("id", "timestamp", "message")
+
 SERIALIZED_SCHEMA = "logGroup string, logStream string, part int, payload binary"
+_SERIALIZED_ARROW = pa.schema([
+    ("logGroup", pa.string()),
+    ("logStream", pa.string()),
+    ("part", pa.int32()),
+    ("payload", pa.binary()),
+])
 
 
 def build_envelopes(
@@ -123,28 +143,35 @@ def _split_serialize(record: dict) -> list[bytes]:
     return out
 
 
+def record_payloads(rows: Iterable) -> Iterator[tuple[str, str, int, bytes]]:
+    """Envelope rows -> (logGroup, logStream, part, payload), one tuple
+    per gzip'd record part. Rows are read by field name (dicts or Rows,
+    any column order), so the JSON key order is always ENVELOPE_FIELDS
+    with EVENT_FIELDS inside each event."""
+    for row in rows:
+        rec = {f: row[f] for f in ENVELOPE_FIELDS}
+        rec["subscriptionFilters"] = list(rec["subscriptionFilters"] or [])
+        rec["logEvents"] = [
+            {f: e[f] for f in EVENT_FIELDS} for e in rec["logEvents"] or []
+        ]
+        for part, blob in enumerate(_split_serialize(rec)):
+            yield rec["logGroup"], rec["logStream"], part, blob
+
+
 def serialize_records(envelopes: DataFrame) -> DataFrame:
-    """Envelope rows -> one or more gzip'd JSON payloads each (G4/G5)."""
+    """Envelope rows -> one or more gzip'd JSON payloads each (G4/G5).
+    A narrow map: each row is serialized on its own, so the envelopes'
+    partitioning is kept and no shuffle is added."""
 
-    def ser(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for rec in pdf.to_dict("records"):
-            rec["subscriptionFilters"] = list(rec["subscriptionFilters"])
-            rec["logEvents"] = [dict(e) for e in rec["logEvents"]]
-            for part, blob in enumerate(_split_serialize(rec)):
-                rows.append(
-                    {
-                        "logGroup": rec["logGroup"],
-                        "logStream": rec["logStream"],
-                        "part": part,
-                        "payload": blob,
-                    }
-                )
-        return pd.DataFrame(rows, columns=["logGroup", "logStream", "part", "payload"])
+    def ser(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(_SERIALIZED_ARROW.names, t))
+                 for t in record_payloads(batch.to_pylist())],
+                schema=_SERIALIZED_ARROW,
+            )
 
-    return envelopes.groupBy("logGroup", "logStream").applyInPandas(
-        ser, schema=SERIALIZED_SCHEMA
-    )
+    return envelopes.mapInArrow(ser, SERIALIZED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -210,6 +237,13 @@ def iter_record_parts(blob: bytes) -> Iterator[dict]:
         pos += consumed
 
 
+def envelope_rows(blob: bytes) -> Iterator[tuple]:
+    """A spool blob -> one envelope tuple (ENVELOPE_FIELDS order) per
+    record part it holds."""
+    for rec in iter_record_parts(blob):
+        yield tuple(rec[f] for f in ENVELOPE_FIELDS)
+
+
 def read_spool(spark, spool_dir: str) -> DataFrame:
     """Spool files -> envelope DataFrame (the engine's own output format
     round-trips through its reader).
@@ -231,26 +265,8 @@ def read_spool(spark, spool_dir: str) -> DataFrame:
 
     def decode(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdfs:
-            rows = []
-            for content in pdf["content"]:
-                for rec in iter_record_parts(bytes(content)):
-                    rows.append(
-                        {
-                            "owner": rec["owner"],
-                            "logGroup": rec["logGroup"],
-                            "logStream": rec["logStream"],
-                            "subscriptionFilters": rec["subscriptionFilters"],
-                            "messageType": rec["messageType"],
-                            "logEvents": rec["logEvents"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "owner", "logGroup", "logStream",
-                    "subscriptionFilters", "messageType", "logEvents",
-                ],
-            )
+            rows = [r for c in pdf["content"] for r in envelope_rows(bytes(c))]
+            yield pd.DataFrame(rows, columns=ENVELOPE_FIELDS)
 
     return raw.select("content").mapInPandas(decode, schema=ENVELOPE_SCHEMA)
 
@@ -278,8 +294,8 @@ def s3_read_spool(
     key table, one task per key batch.
 
     Reference parity: utils/kinesis-s3-dump.py:41-49 (bucket listing +
-    per-object multi-member gzip decode); same decode loop as
-    `read_spool` (`iter_record_parts`).
+    per-object multi-member gzip decode); same decode as `read_spool`
+    (`envelope_rows`).
     """
     if client_factory is None:
         def client_factory():  # pragma: no cover - needs boto3
@@ -307,17 +323,12 @@ def s3_read_spool(
 
     def fetch(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = client_factory()  # one client per Python worker
-        cols = [
-            "owner", "logGroup", "logStream",
-            "subscriptionFilters", "messageType", "logEvents",
-        ]
         for pdf in pdfs:
-            rows = []
-            for k in pdf["key"]:
-                blob = c.get_object(Bucket=bucket, Key=k)["Body"].read()
-                for rec in iter_record_parts(blob):
-                    rows.append({col: rec[col] for col in cols})
-            yield pd.DataFrame(rows, columns=cols)
+            rows = [
+                r for k in pdf["key"]
+                for r in envelope_rows(c.get_object(Bucket=bucket, Key=k)["Body"].read())
+            ]
+            yield pd.DataFrame(rows, columns=ENVELOPE_FIELDS)
 
     return kdf.mapInPandas(fetch, schema=ENVELOPE_SCHEMA)
 

@@ -48,39 +48,29 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from kinesyslog_spark.constants import SPOOL_PREFIX
+from kinesyslog_spark.sinks.records import (
+    ENVELOPE_SCHEMA,
+    envelope_rows,
+    record_payloads,
+    spool_write,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.types import StructType
 
-SPOOL_GLOB_PREFIX = "firehose_event-"  # constants.SPOOL_PREFIX (kept literal:
-# the reader is pickled to executors and stays self-contained)
+SPOOL_GLOB_PREFIX = SPOOL_PREFIX
 
-ENVELOPE_DDL = (
-    "owner string, logGroup string, logStream string, "
-    "subscriptionFilters array<string>, messageType string, "
-    "logEvents array<struct<id: string, timestamp: long, message: string>>, "
-    "src_file string"
-)
+ENVELOPE_DDL = ENVELOPE_SCHEMA + ", src_file string"
 
 
 def _decode_file(path: str) -> Iterator[tuple]:
     """Multi-member gzip -> envelope tuples (one per record part)."""
-    from kinesyslog_spark.sinks.records import iter_record_parts
-
     with open(path, "rb") as f:
         blob = f.read()
-    for rec in iter_record_parts(blob):
-        yield (
-            rec["owner"],
-            rec["logGroup"],
-            rec["logStream"],
-            rec["subscriptionFilters"],
-            rec["messageType"],
-            [
-                (e["id"], e["timestamp"], e["message"])
-                for e in rec["logEvents"]
-            ],
-            os.path.basename(path),
-        )
+    name = os.path.basename(path)
+    for row in envelope_rows(blob):
+        yield (*row, name)
 
 
 def _spool_files(path: str) -> list[tuple[float, str]]:
@@ -191,24 +181,10 @@ class _SpoolWriter(DataSourceWriter):
             raise ValueError("kinesyslogspool requires a path (.save(dir))")
 
     def write(self, iterator) -> "_SpoolCommit":
-        from kinesyslog_spark.sinks.records import _split_serialize, spool_write
-
         n = 0
-        for row in iterator:
-            rec = {
-                "owner": row.owner,
-                "logGroup": row.logGroup,
-                "logStream": row.logStream,
-                "subscriptionFilters": list(row.subscriptionFilters or []),
-                "messageType": row.messageType,
-                "logEvents": [
-                    {"id": e.id, "timestamp": e.timestamp, "message": e.message}
-                    for e in (row.logEvents or [])
-                ],
-            }
-            for blob in _split_serialize(rec):
-                spool_write(blob, self.path)
-                n += 1
+        for *_, blob in record_payloads(iterator):
+            spool_write(blob, self.path)
+            n += 1
         return _SpoolCommit(n)
 
     def commit(self, messages) -> None:

@@ -43,7 +43,7 @@ from kinesyslog_spark.operators.framing import (
     decompress_message,
     gelf_format,
 )
-from kinesyslog_spark.sinks.records import spool_batch
+from kinesyslog_spark.streaming.relay import start_spool_sink, tail_lines
 from kinesyslog_spark.streaming.state import (
     DEFAULT_TIMEOUT_MS,
     reassemble_chunks_stream_keyed,
@@ -55,11 +55,7 @@ GELF_LINE_SCHEMA = "raw_b64 string, source string, dest int, recv_ts timestamp, 
 
 def read_gelf_stream(spark: SparkSession, input_dir: str,
                      max_files_per_trigger: int = 64) -> DataFrame:
-    return (
-        spark.readStream.schema(GELF_LINE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
-    )
+    return tail_lines(spark, input_dir, GELF_LINE_SCHEMA, max_files_per_trigger)
 
 
 def _documents(payloads: DataFrame) -> DataFrame:
@@ -151,13 +147,5 @@ def start_gelf_relay(
     (message.py GelfMessage.LOG_GROUP_FORMAT analog)."""
     envelope_kw.setdefault("fmt", "gelf")
     events = parse_gelf_stream(read_gelf_stream(spark, input_dir))
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spool_batch(batch_df, spool_dir, **envelope_kw)
-
-    return (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return start_spool_sink(events, spool_dir, checkpoint_dir,
+                            trigger_seconds, envelope_kw)

@@ -26,7 +26,7 @@ Reference parity: none; streaming counterpart of SURVEY §2b q145.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 

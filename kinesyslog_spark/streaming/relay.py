@@ -26,15 +26,39 @@ from kinesyslog_spark.sinks.records import spool_batch
 LINE_SCHEMA = "raw string, source string, dest int, recv_ts timestamp, seq long"
 
 
-def read_line_stream(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: int = 64) -> DataFrame:
-    """Tail the bridge spool directory (S1/S2's Spark-side half).
-    maxFilesPerTrigger is the source-side backpressure (T2/T3 analog)."""
+def tail_lines(spark: SparkSession, input_dir: str, schema: str,
+               max_files_per_trigger: int) -> DataFrame:
+    """Tail a bridge spool directory of JSON lines in `schema` (the
+    syslog and GELF relays' shared reader). maxFilesPerTrigger is the
+    source-side backpressure (T2/T3 analog)."""
     return (
-        spark.readStream.schema(LINE_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(input_dir)
     )
+
+
+def start_spool_sink(events: DataFrame, spool_dir: str, checkpoint_dir: str,
+                     trigger_seconds: int, envelope_kw: dict) -> StreamingQuery:
+    """Start `events` into the record spool (the syslog and GELF relays'
+    shared sink): one `spool_batch` per trigger, progress checkpointed
+    under `checkpoint_dir`."""
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        spool_batch(batch_df, spool_dir, **envelope_kw)
+
+    return (
+        events.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(processingTime=f"{trigger_seconds} seconds")
+        .start()
+    )
+
+
+def read_line_stream(spark: SparkSession, input_dir: str,
+                     max_files_per_trigger: int = 64) -> DataFrame:
+    """Tail the bridge spool directory (S1/S2's Spark-side half)."""
+    return tail_lines(spark, input_dir, LINE_SCHEMA, max_files_per_trigger)
 
 
 def start_relay(
@@ -57,13 +81,5 @@ def start_relay(
     from kinesyslog_spark.observability import observe_messages
 
     events = parse_syslog(observe_messages(read_line_stream(spark, input_dir)))
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spool_batch(batch_df, spool_dir, **envelope_kw)
-
-    return (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return start_spool_sink(events, spool_dir, checkpoint_dir,
+                            trigger_seconds, envelope_kw)

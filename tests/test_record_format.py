@@ -6,10 +6,21 @@ from __future__ import annotations
 
 import gzip
 import json
+import os
 
 from pyspark.sql import functions as F
 
-from kinesyslog_spark.sinks.records import build_envelopes, serialize_records
+from kinesyslog_spark.sinks.records import (
+    build_envelopes,
+    serialize_records,
+    spool_batch,
+)
+
+RECORD_KEYS = [
+    "owner", "logGroup", "logStream", "subscriptionFilters", "messageType",
+    "logEvents",
+]
+EVENT_KEYS = ["id", "timestamp", "message"]
 
 
 def _events(spark):
@@ -74,3 +85,55 @@ def test_envelope_explode_projection(spark):
         .count()
     )
     assert out == 2
+
+
+def _spooled_key_orders(spool_dir):
+    """(record keys, event keys) per spool file, in the order the raw
+    decompressed JSON bytes hold them."""
+    out = []
+    for name in sorted(os.listdir(spool_dir)):
+        with open(os.path.join(spool_dir, name), "rb") as f:
+            raw = gzip.decompress(f.read())
+        assert raw.startswith(b'{"owner":'), raw[:40]
+        pairs = json.loads(raw, object_pairs_hook=list)
+        events = dict(pairs)["logEvents"]
+        assert events
+        out.append(([k for k, _ in pairs], {tuple(k for k, _ in e) for e in events}))
+    return out
+
+
+def test_spool_batch_key_order(spark, tmp_path):
+    """The relay sink writes the canonical key order, whatever the
+    column order of its input frame."""
+    spool_dir = str(tmp_path / "spool")
+    events = _events(spark)
+    n = spool_batch(events, spool_dir)
+    n += spool_batch(events.select("dest", "message", "source", "ts_ms", "id"), spool_dir)
+    orders = _spooled_key_orders(spool_dir)
+    assert len(orders) == n == 2
+    assert orders == [(RECORD_KEYS, {tuple(EVENT_KEYS)})] * 2
+
+
+def test_spool_writer_key_order(spark, tmp_path):
+    """df.write.format("kinesyslogspool") writes the same key order as
+    the relay sink, also from a frame whose columns (and event struct
+    fields) are in another order."""
+    from kinesyslog_spark.sources.spool_source import register_spool_source
+
+    register_spool_source(spark)
+    env = build_envelopes(_events(spark), owner="1")
+    shuffled = env.select(
+        F.transform(
+            "logEvents",
+            lambda e: F.struct(
+                e["message"].alias("message"),
+                e["timestamp"].alias("timestamp"),
+                e["id"].alias("id"),
+            ),
+        ).alias("logEvents"),
+        "messageType", "logStream", "subscriptionFilters", "logGroup", "owner",
+    )
+    spool_dir = str(tmp_path / "wspool")
+    for frame in (env, shuffled):
+        frame.write.format("kinesyslogspool").mode("append").save(spool_dir)
+    assert _spooled_key_orders(spool_dir) == [(RECORD_KEYS, {tuple(EVENT_KEYS)})] * 2

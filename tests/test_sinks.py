@@ -6,6 +6,7 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import random
 
 from pyspark.sql import functions as F
 
@@ -16,6 +17,7 @@ from kinesyslog_spark.sinks.records import (
     iter_record_parts,
     pack_upload_batches,
     read_spool,
+    serialize_records,
     spool_batch,
     spool_write,
 )
@@ -134,3 +136,44 @@ def test_spool_batch_count_ignores_preexisting_files(spark, tmp_path):
     assert spool_batch(events, spool_dir) == 6
     # second batch into the same dir: still 6, not 12
     assert spool_batch(events, spool_dir) == 6
+
+
+def test_spool_batch_splits_oversize_group(spark, tmp_path):
+    """One (source, dest) group whose gzip'd record exceeds
+    MAX_RECORD_SIZE: spool_batch returns the number of files it wrote,
+    every file fits, and the parts hold each event exactly once."""
+    rng = random.Random(0)
+    rows = [
+        (f"{i:06d}", 1700000000000 + i, rng.randbytes(1024).hex(), "10.0.0.1", 514)
+        for i in range(2000)
+    ]
+    events = spark.createDataFrame(
+        rows, "id string, ts_ms long, message string, source string, dest int"
+    )
+    spool_dir = str(tmp_path / "big")
+    n = spool_batch(events, spool_dir)
+    paths = [os.path.join(spool_dir, f) for f in os.listdir(spool_dir)]
+    assert n == len(paths) >= 2
+    assert all(os.path.getsize(p) <= MAX_RECORD_SIZE for p in paths)
+    ids = sorted(
+        e["id"]
+        for p in paths
+        for rec in iter_record_parts(open(p, "rb").read())
+        for e in rec["logEvents"]
+    )
+    assert ids == [r[0] for r in rows]
+
+
+def test_serialize_plan_has_one_exchange(spark):
+    """The sink shuffles once, on (source, dest) in build_envelopes;
+    serializing is a narrow map over the envelope rows (no second
+    Exchange, no Sort, no grouped pandas UDF)."""
+    plan = (
+        serialize_records(build_envelopes(_events(spark)))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(source#" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "Sort [" not in plan, plan
+    assert "MapInArrow" in plan, plan

@@ -667,3 +667,66 @@ def test_interval_join_stream_full_outer(spark, tmp_path):
         assert (None, "b3") in got, f"unmatched RIGHT row never emitted: {got}"
     finally:
         q.stop()
+
+
+@pytest.mark.parametrize("fail", ["before_spool", "after_spool"])
+def test_streaming_relay_replays_failed_epoch(spark, tmp_path, monkeypatch, fail):
+    """At-least-once across a failed sink. The first epoch fails with its
+    offsets logged but not committed, either before anything is spooled
+    (the spool path is a regular file, so every spool_write raises;
+    local[n] does not retry tasks) or after spool_batch has written the
+    whole epoch. A restart on the same checkpoint replays that epoch:
+    every input seq reaches the spool, twice when the failed epoch had
+    already spooled it."""
+    from kinesyslog_spark.streaming import relay
+
+    in_dir, spool_dir, ckpt = (str(tmp_path / d) for d in ("in", "spool", "ckpt"))
+    os.makedirs(in_dir)
+    seqs = list(range(12))
+    for part in range(3):
+        _write_json(os.path.join(in_dir, f"lines{part}.json"), [
+            {"raw": f"<13>1 2024-01-01T00:00:{i:02d}.000000+00:00 h app - - - seq={i}",
+             "source": f"10.0.0.{i % 3}", "dest": 514 if i % 2 else 6514,
+             "recv_ts": f"2024-01-01T00:00:{i:02d}.000000", "seq": i}
+            for i in seqs[part::3]
+        ])
+    if fail == "before_spool":
+        with open(spool_dir, "w") as f:
+            f.write("not a directory")
+    else:
+        real = relay.spool_batch
+
+        def spool_then_die(*args, **kw):
+            real(*args, **kw)
+            raise RuntimeError("simulated crash between spool and commit")
+
+        monkeypatch.setattr(relay, "spool_batch", spool_then_die)
+
+    q = start_relay(spark, in_dir, spool_dir, ckpt, trigger_seconds=1)
+    try:
+        with pytest.raises(Exception):
+            q.processAllAvailable()
+        assert q.exception() is not None
+    finally:
+        q.stop()
+    assert os.path.exists(os.path.join(ckpt, "offsets", "0"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+    if fail == "before_spool":
+        os.remove(spool_dir)
+    monkeypatch.undo()
+    q2 = start_relay(spark, in_dir, spool_dir, ckpt, trigger_seconds=1)
+    try:
+        q2.processAllAvailable()
+    finally:
+        q2.stop()
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+    got = sorted(
+        int(r["e"]["message"].rsplit("seq=", 1)[1])
+        for r in read_spool(spark, spool_dir)
+        .select(F.explode("logEvents").alias("e"))
+        .collect()
+    )
+    copies = 1 if fail == "before_spool" else 2
+    assert got == sorted(seqs * copies)
