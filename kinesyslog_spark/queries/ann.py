@@ -476,7 +476,7 @@ def q38_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.aggregate("q", F.lit(0).cast("long"), lambda a, x: a + x * x),
             )
         )
-        n_vec = base.count()  # cached frame: a cheap metadata-ish action
+        n_vec = keep.count(base)
         if GEMM_MAX_PAIRS and n_vec * (n_vec - 1) // 2 > GEMM_MAX_PAIRS:
             # the registry unpersists base on this abort path
             from kinesyslog_spark.queries.resolution import (

@@ -1021,7 +1021,7 @@ def ngram_candidates_frame(
         )
     )
     if rows is None:
-        rows = auto_ngram_rows(base.count())
+        rows = auto_ngram_rows(keep.count(base))
     # Blocking signatures run over the LONGER 9-gram shingles (see the
     # NGRAM_BLOCK_N note): same minhash machinery, different gram size.
     keyed = keep(

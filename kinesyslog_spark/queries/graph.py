@@ -207,7 +207,7 @@ def _pr_build(spark, sf_dir, cap, keep):
         )
     )
     nodes = keep(edges.select(F.col("src").alias("node")).distinct())
-    n = nodes.count()  # driver scalar (graph size), like q40's convergence check
+    n = keep.count(nodes)  # driver scalar (graph size), like q40's convergence check
     outw = (
         edges.groupBy("src")
         .agg(F.sum("w_dec").cast("double").alias("tw"))

@@ -167,7 +167,7 @@ def _tri_build(spark, sf_dir, keep):
             F.when(a_low, F.col("pb")).otherwise(F.col("pa")).alias("v"),
         )
     )
-    n_edges = eo.count()
+    n_edges = keep.count(eo)
     adj = eo.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb"))
     return eo, adj, n_edges
 

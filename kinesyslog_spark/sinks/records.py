@@ -7,13 +7,18 @@ Pipeline (sink.py:141-217 re-expressed Spark-first):
    README.md:96-132). Pure DataFrame ops; the shuffle key is the
    reference's own grouping key.
 2. `serialize_records` — mapInArrow over the envelope rows, which
-   already hold one (logGroup, logStream) each, so no second shuffle:
-   `record_payloads` fixes the key order and gzips the JSON at level 9
-   (sink.py:211-217); records whose compressed size exceeds 1000 KB are
-   split into ⌈size/max⌉ even event-slices and re-compressed
-   (sink.py:167-183 — including its 'naively hopes' even-split policy).
-   Every envelope→payload path (this one, `spool_batch`, the
-   `kinesyslogspool` writer) goes through `record_payloads`, and every
+   already hold one (logGroup, logStream) each, so no second shuffle.
+   `record_payloads` is the columnar codec: it encodes each event once,
+   from the `logEvents` offsets and the id/timestamp/message child
+   arrays, with json's C string encoder, into a JSON fragment; a record
+   is its head + the joined fragments, byte-identical to json.dumps in
+   the canonical key order, gzip'd at level 9 (sink.py:211-217).
+   Records whose compressed size exceeds 1000 KB are split into
+   ⌈size/max⌉ even event-slices and re-compressed (sink.py:167-183 —
+   including its 'naively hopes' even-split policy); a slice re-joins
+   fragments and never re-encodes. Every envelope→payload path (this
+   one, `spool_batch`, the `kinesyslogspool` Arrow writers) goes
+   through `record_payloads`, and every
    spool blob→envelope path (`read_spool`, `s3_read_spool`, the
    `kinesyslogspool` reader) through `envelope_rows`.
 3. `spool_write` — K1 atomic publish: write temp file, hard-link to the
@@ -37,6 +42,10 @@ import tempfile
 import uuid
 import zlib
 from collections.abc import Iterable, Iterator
+# JSON text of one string, exactly as json.dumps writes it (ensure_ascii:
+# non-ASCII, C0 controls and DEL as \u escapes; '/' is never escaped —
+# ujson escape_forward_slashes=False parity).
+from json.encoder import encode_basestring_ascii as _json_str
 
 import pandas as pd
 import pyarrow as pa
@@ -56,6 +65,19 @@ ENVELOPE_SCHEMA = (
     "subscriptionFilters array<string>, messageType string, "
     "logEvents array<struct<id: string, timestamp: long, message: string>>"
 )
+# ENVELOPE_SCHEMA as Arrow, for record dicts turned into codec input.
+ENVELOPE_ARROW = pa.schema([
+    ("owner", pa.string()),
+    ("logGroup", pa.string()),
+    ("logStream", pa.string()),
+    ("subscriptionFilters", pa.list_(pa.string())),
+    ("messageType", pa.string()),
+    ("logEvents", pa.list_(pa.struct([
+        ("id", pa.string()),
+        ("timestamp", pa.int64()),
+        ("message", pa.string()),
+    ]))),
+])
 
 # Canonical JSON key order of a record and of each of its events.
 ENVELOPE_FIELDS = (
@@ -115,47 +137,109 @@ def build_envelopes(
     )
 
 
-def _compress(record: dict) -> bytes:
-    # escape_forward_slashes=False parity: json.dumps never escapes '/'.
-    return gzip.compress(
-        json.dumps(record, separators=(",", ":")).encode("utf-8"), compresslevel=9
-    )
+def _value(v: str | None) -> str:
+    return "null" if v is None else _json_str(v)
 
 
-def _split_serialize(record: dict) -> list[bytes]:
-    """G4: gzip; if compressed > MAX_RECORD_SIZE split logEvents into
-    ⌈size/max⌉ even slices along message boundaries and re-compress each
+def _texts(arr: pa.Array, enc) -> list[str]:
+    """JSON text of each value of `arr`: enc(value), or null."""
+    vals = arr.to_pylist()
+    if arr.null_count:
+        return ["null" if v is None else enc(v) for v in vals]
+    return list(map(enc, vals))
+
+
+def _event_fragments(events: pa.StructArray) -> list[str]:
+    """One JSON object per event, keys in EVENT_FIELDS order."""
+    frags = [
+        f'{{"id":{i},"timestamp":{t},"message":{m}}}'
+        for i, t, m in zip(_texts(events.field("id"), _json_str),
+                           _texts(events.field("timestamp"), str),
+                           _texts(events.field("message"), _json_str))
+    ]
+    if events.null_count:
+        frags = [f if ok else "null"
+                 for f, ok in zip(frags, events.is_valid().to_pylist())]
+    return frags
+
+
+def _encoded_records(batch: pa.RecordBatch) -> Iterator[tuple]:
+    """Envelope batch -> (logGroup, logStream, head, event fragments) per
+    row. The record's JSON is head + ",".join(fragments) + "]}", keys in
+    ENVELOPE_FIELDS order. Columns and event fields are read by name, so
+    any column order encodes the same; a sliced batch is read through
+    its own offsets. A null string or timestamp is null, a null
+    subscriptionFilters or logEvents list is []."""
+    logs = batch.column("logEvents")
+    offs = logs.offsets.to_pylist()
+    base = offs[0]
+    frags = _event_fragments(logs.values.slice(base, offs[-1] - base))
+    heads = zip(*(batch.column(f).to_pylist() for f in ENVELOPE_FIELDS[:-1]))
+    has_events = logs.is_valid().to_pylist()
+    for r, (owner, group, stream, filters, mtype) in enumerate(heads):
+        head = "".join((
+            '{"owner":', _value(owner), ',"logGroup":', _value(group),
+            ',"logStream":', _value(stream), ',"subscriptionFilters":[',
+            ",".join(map(_value, filters or ())), '],"messageType":',
+            _value(mtype), ',"logEvents":[',
+        ))
+        lo, hi = (offs[r] - base, offs[r + 1] - base) if has_events[r] else (0, 0)
+        yield group, stream, head, frags[lo:hi]
+
+
+def _gzip(head: str, frags: list[str]) -> bytes:
+    text = head + ",".join(frags) + "]}"
+    return gzip.compress(text.encode("ascii"), compresslevel=9)
+
+
+def _split(head: str, frags: list[str]) -> list[bytes]:
+    """G4: gzip; if compressed > MAX_RECORD_SIZE split the events into
+    ⌈size/max⌉ even slices along event boundaries and re-compress each
     (sink.py:167-183). Like the reference, slices are 'naively hoped' to
-    fit; a still-oversize slice recurses."""
-    blob = _compress(record)
+    fit; a still-oversize slice recurses. Slices re-join the events'
+    JSON fragments; nothing is encoded twice."""
+    blob = _gzip(head, frags)
     if len(blob) <= MAX_RECORD_SIZE:
         return [blob]
-    events = record["logEvents"]
     n_parts = -(-len(blob) // MAX_RECORD_SIZE)
-    per = -(-len(events) // n_parts)
+    per = -(-len(frags) // n_parts)
     out: list[bytes] = []
-    for i in range(0, len(events), per):
-        part = dict(record, logEvents=events[i:i + per])
-        if len(part["logEvents"]) == len(events):  # cannot split further
-            out.append(_compress(part))
+    for i in range(0, len(frags), per):
+        part = frags[i:i + per]
+        if len(part) == len(frags):  # cannot split further
+            out.append(_gzip(head, part))
         else:
-            out.extend(_split_serialize(part))
+            out.extend(_split(head, part))
     return out
 
 
-def record_payloads(rows: Iterable) -> Iterator[tuple[str, str, int, bytes]]:
-    """Envelope rows -> (logGroup, logStream, part, payload), one tuple
-    per gzip'd record part. Rows are read by field name (dicts or Rows,
-    any column order), so the JSON key order is always ENVELOPE_FIELDS
-    with EVENT_FIELDS inside each event."""
-    for row in rows:
-        rec = {f: row[f] for f in ENVELOPE_FIELDS}
-        rec["subscriptionFilters"] = list(rec["subscriptionFilters"] or [])
-        rec["logEvents"] = [
-            {f: e[f] for f in EVENT_FIELDS} for e in rec["logEvents"] or []
-        ]
-        for part, blob in enumerate(_split_serialize(rec)):
-            yield rec["logGroup"], rec["logStream"], part, blob
+def record_payloads(
+    batches: Iterable[pa.RecordBatch],
+) -> Iterator[tuple[str, str, int, bytes]]:
+    """The record codec: envelope Arrow batches -> (logGroup, logStream,
+    part, payload), one tuple per gzip'd record part. The JSON text is
+    byte-identical to json.dumps(record, separators=(",", ":")) with the
+    keys in ENVELOPE_FIELDS / EVENT_FIELDS order, built column-wise:
+    each event is encoded once, from the struct's child arrays."""
+    for batch in batches:
+        for group, stream, head, frags in _encoded_records(batch):
+            for part, blob in enumerate(_split(head, frags)):
+                yield group, stream, part, blob
+
+
+def _record_batch(record: dict) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pylist([record], schema=ENVELOPE_ARROW)
+
+
+def _split_serialize(record: dict) -> list[bytes]:
+    """One record dict -> its gzip'd parts, through the codec."""
+    return [blob for *_, blob in record_payloads([_record_batch(record)])]
+
+
+def _compress(record: dict) -> bytes:
+    """One record dict -> one gzip member, never split."""
+    (_, _, head, frags), = _encoded_records(_record_batch(record))
+    return _gzip(head, frags)
 
 
 def serialize_records(envelopes: DataFrame) -> DataFrame:
@@ -167,7 +251,7 @@ def serialize_records(envelopes: DataFrame) -> DataFrame:
         for batch in batches:
             yield pa.RecordBatch.from_pylist(
                 [dict(zip(_SERIALIZED_ARROW.names, t))
-                 for t in record_payloads(batch.to_pylist())],
+                 for t in record_payloads([batch])],
                 schema=_SERIALIZED_ARROW,
             )
 

@@ -40,7 +40,9 @@ from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
@@ -165,10 +167,10 @@ class _SpoolCommit(WriterCommitMessage):
         self.n_files = n_files
 
 
-class _SpoolWriter(DataSourceWriter):
-    """`df.write.format("kinesyslogspool")`: envelope rows -> gzip-9
-    JSON record files through the SAME split/compress/atomic-link path
-    as the relay sink (sinks/records.py G4/G5 + K1).
+class _SpoolWriter(DataSourceArrowWriter):
+    """`df.write.format("kinesyslogspool")`: envelope Arrow batches ->
+    gzip-9 JSON record files through the SAME codec and atomic-link path
+    as the relay sink (sinks/records.py `record_payloads` + K1).
 
     Each file becomes visible only through the temp+link publish, so a
     crashed task leaves no partial file; a RETRIED task re-links new
@@ -195,7 +197,7 @@ class _SpoolWriter(DataSourceWriter):
         # (at-least-once, see class docstring)
 
 
-class _SpoolStreamWriter(DataSourceStreamWriter):
+class _SpoolStreamWriter(DataSourceStreamArrowWriter):
     """`df.writeStream.format("kinesyslogspool")`: the native streaming
     form of the relay's foreachBatch spool sink (sinks/records.py:
     spool_batch). Same per-part atomic publish; a replayed micro-batch

@@ -264,7 +264,9 @@ class _Keep:
     materializes it. A build whose next plan reads a kept frame from two
     subtrees (a self-join, a broadcast of it) counts the frame first, or
     the subtrees race to compute it before the cache fills (measured
-    5-10x first-run slowdowns). keep.checkpoint(df):
+    5-10x first-run slowdowns). keep.count(df): df.count(), and marks df
+    materialized, so the registry does not count it again when the build
+    returns it. keep.checkpoint(df):
     df.localCheckpoint(eager) under the same ownership — an artifact
     owns every checkpoint its build made (the result's lineage may read
     them), a scratch() block drops them on exit. drop() releases every
@@ -273,11 +275,17 @@ class _Keep:
     def __init__(self) -> None:
         self.frames: list[DataFrame] = []
         self.ckpts: list[DataFrame] = []
+        self.counted: list[DataFrame] = []
 
     def __call__(self, df: DataFrame) -> DataFrame:
         df = df.persist(HOT_LEVEL)
         self.frames.append(df)
         return df
+
+    def count(self, df: DataFrame) -> int:
+        n = df.count()
+        self.counted.append(df)
+        return n
 
     def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
         df = df.localCheckpoint(eager)
@@ -290,7 +298,7 @@ class _Keep:
                 df.unpersist()
         for df in self.ckpts:
             _uncheckpoint(df)
-        self.frames, self.ckpts = [], []
+        self.frames, self.ckpts, self.counted = [], [], []
 
 
 def _uncheckpoint(df: DataFrame) -> None:
@@ -341,9 +349,10 @@ def artifact(spark: SparkSession, sf_dir: str, family: str, build,
 
     `build(keep)` returns a DataFrame, a tuple (DataFrames and plain
     values), or a plain value. Returned frames are persisted at
-    HOT_LEVEL and materialized (a returned keep.checkpoint frame is
-    already materialized); frames that another artifact already holds
-    (cached when returned, not kept here) are borrowed, not owned.
+    HOT_LEVEL and materialized (a returned keep.checkpoint or
+    keep.count frame is already materialized); frames that another
+    artifact already holds (cached when returned, not kept here) are
+    borrowed, not owned.
     Frames the build passed to keep() but did not return are
     unpersisted once it returns; its checkpoints stay with the entry.
     On a raise every kept frame and checkpoint is released and nothing
@@ -387,7 +396,8 @@ def artifact(spark: SparkSession, sf_dir: str, family: str, build,
                 if any(df is k for k in keep.frames)
             )
             for df in owned:
-                df.count()
+                if not any(df is c for c in keep.counted):
+                    df.count()
         except BaseException:
             keep.drop()
             raise

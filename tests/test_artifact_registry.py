@@ -133,6 +133,71 @@ def test_keep_intermediates_drop_on_return_and_raise(spark):
     assert not out.is_cached
 
 
+def _jobs_after_build(spark, monkeypatch, module, call) -> list[int]:
+    """Run `call()` with `module.artifact` wrapped so that every job the
+    registry runs after the build returns lands in one job group; return
+    that group's job ids."""
+    sc = spark.sparkContext
+    group = f"after-build-{id(call)}"
+    real = module.artifact
+
+    def spy(spark_, sf_dir_, family, build, **kw):
+        def wrapped(keep):
+            value = build(keep)
+            sc.setJobGroup(group, "registry work after the build")
+            return value
+
+        try:
+            return real(spark_, sf_dir_, family, wrapped, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(module, "artifact", spy)
+    call()
+    monkeypatch.undo()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_keep_count_frames_are_not_counted_again(spark, monkeypatch):
+    """A returned frame the build counted through keep.count is cached
+    and owned, and the registry runs no job to materialize it."""
+    from kinesyslog_spark import tables
+
+    corpus = "/tmp/registry-counted"
+
+    def build(keep):
+        df = keep(spark.range(100).selectExpr("id * 3 AS x"))
+        return df, keep.count(df)
+
+    got = []
+    try:
+        jobs = _jobs_after_build(
+            spark, monkeypatch, tables,
+            lambda: got.append(tables.artifact(spark, corpus, "unit", build)))
+        (df, n), = got
+        assert n == 100 and df.is_cached
+        assert _entry(spark, corpus, "unit")["frames"] == 1
+        assert jobs == []
+    finally:
+        release_artifacts(spark, corpus)
+
+
+def test_q38_build_runs_no_count_after_returning(spark, sf_dir, monkeypatch):
+    """q38's build counts its quantized frame (n_vec): the registry
+    does not count it a second time."""
+    from kinesyslog_spark.queries import ann
+
+    release_artifacts(spark, sf_dir, "q38_quantized")
+    try:
+        jobs = _jobs_after_build(
+            spark, monkeypatch, ann,
+            lambda: QUERIES["q38_embedding_neardup"](spark, sf_dir))
+        assert _entry(spark, sf_dir.rstrip("/"), "q38_quantized")["frames"] == 1
+        assert jobs == []
+    finally:
+        release_artifacts(spark, sf_dir, "q38_quantized")
+
+
 def test_borrowed_frames_are_not_released_by_the_borrower(spark):
     corpus = "/tmp/registry-borrow"
     try:

@@ -425,6 +425,34 @@ def test_streaming_relay_end_to_end(spark, tmp_path):
         q.stop()
 
 
+def test_relay_trigger_runs_no_listing_job(spark, tmp_path):
+    """A trigger over 64 bridge files lists them on the driver: no stage
+    of the query's jobs has a task per file (the parallel partition
+    discovery job that 64 paths used to start)."""
+    from kinesyslog_spark.sources.bridge import ROLL_COUNT, SpoolWriter
+
+    in_dir, spool_dir, ckpt = (str(tmp_path / d) for d in ("in", "spool", "ckpt"))
+    files = 64
+    writer = SpoolWriter(in_dir)
+    for i in range(files * ROLL_COUNT):
+        writer.add(f"<13>1 2024-01-01T00:00:01.000000+00:00 h app - - - seq={i}",
+                   "10.0.0.1", 514)
+    assert len(os.listdir(in_dir)) == files
+    q = start_relay(spark, in_dir, spool_dir, ckpt, trigger_seconds=1)
+    try:
+        q.processAllAvailable()
+        assert [p["numInputRows"] for p in q.recentProgress
+                if p["numInputRows"]] == [files * ROLL_COUNT]
+    finally:
+        q.stop()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(str(q.runId))]
+    tasks = [tracker.getStageInfo(s).numTasks for j in jobs if j for s in j.stageIds
+             if tracker.getStageInfo(s)]
+    assert tasks, "the query's jobs are not visible under its runId"
+    assert max(tasks) < files, tasks
+
+
 def test_session_window_reassembly_batch_parity(spark):
     """The session_window variant assembles exactly like the stateful op:
     dedup first-wins by seq, complete groups only, >128-chunk groups
