@@ -6,8 +6,12 @@ Python enters only where the semantics demand it, always Arrow-batched:
 - scalar pandas UDF ........ operators/framing.py (zlib/gzip decompress,
                              lossy-decode parity)
 - grouped-map applyInPandas  operators/framing.py (stream reframing)
-- mapInArrow ............... sinks/records.py (record JSON + gzip + split)
-- mapInPandas .............. operators/multimodal.py, sinks/records.py
+- grouped-map applyInArrow . sinks/records.py (the relay sink: envelope +
+                             record JSON + gzip + split + spool, one
+                             Python pass per trigger)
+- mapInArrow ............... sinks/records.py (reference-path record
+                             serialization, spool read-back)
+- mapInPandas .............. operators/multimodal.py
 - applyInPandasWithState ... streaming/state.py (chunk reassembly)
 - grouped-agg pandas UDF ... THIS MODULE: `gmean_udaf` — a custom
                              aggregate Catalyst lacks (geometric mean),
@@ -21,8 +25,9 @@ Python enters only where the semantics demand it, always Arrow-batched:
                              terminators, 6 KiB truncate).
 
 These are demonstration-grade entry points with tests
-(tests/test_udf_surface.py); the hot relay path stays UDF-free
-(tests/test_plans.py::test_q24_parse_all_jvm_side).
+(tests/test_udf_surface.py); the relay's parse stays UDF-free
+(tests/test_plans.py::test_q24_parse_all_jvm_side) and its sink is one
+Python pass (tests/test_streaming.py::test_relay_sink_runs_one_python_node).
 """
 
 from __future__ import annotations

@@ -27,13 +27,21 @@ def get_spark(app_name: str = "kinesyslog_spark", cpus: str | int | None = None,
       converts sort-merge joins to broadcast at runtime when a side turns
       out small.
     - Arrow enabled with a large batch size: the few Python UDFs we use
-      (mapInArrow record serialization, pandas minhash) amortize
+      (the applyInArrow relay sink, pandas minhash) amortize
       per-batch overhead.
     - parquet timestamps read as TIMESTAMP_LTZ with session UTC so epoch
       extraction matches a DuckDB oracle reading the same files.
     - file listing stays on the driver up to 1024 paths: the relay's
       file source lists each trigger's files (up to 64) itself instead of
       running a Spark listing job per trigger.
+    - Python workers fork from `kinesyslog_spark.worker_daemon`, which
+      wraps pyspark's daemon: before each task it drops the cached
+      zipimporters of pyspark.zip and the Spark jar, which pyspark's
+      per-task `importlib.invalidate_caches()` would otherwise make
+      re-read their whole archive directories (130-220 ms of every
+      Python task). The daemon is imported like any engine module a
+      UDF uses, so the repo must be importable by the workers (run from
+      the repo root, or with it on PYTHONPATH).
     """
     cpus = str(cpus or DEFAULT_CPUS)
     builder = (
@@ -56,6 +64,9 @@ def get_spark(app_name: str = "kinesyslog_spark", cpus: str | int | None = None,
         # against 15-25 ms listed on the driver. 1024 sits above any
         # per-trigger file count.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+        # pyspark's daemon honours a worker module only under `pyspark.`,
+        # so the per-task hook wraps the daemon instead (see its module).
+        .config("spark.python.daemon.module", "kinesyslog_spark.worker_daemon")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

@@ -2,12 +2,18 @@ r"""Record envelope build + spool sink + read-back (reference G1-G5, K1, E3).
 
 Pipeline (sink.py:141-217 re-expressed Spark-first):
 
-1. `build_envelopes`  — groupBy (source, dest) + collect_list(struct) →
-   the CloudWatch-Logs-subscription-shaped Record (sink.py:194-209,
-   README.md:96-132). Pure DataFrame ops; the shuffle key is the
-   reference's own grouping key.
-2. `serialize_records` — mapInArrow over the envelope rows, which
-   already hold one (logGroup, logStream) each, so no second shuffle.
+1. `spool_batch` — the relay sink: one groupBy (source, dest)
+   `applyInArrow`, the reference's own grouping key as the only shuffle
+   key. Per group, the kernel sorts the events by (ts_ms, id, message),
+   builds the CloudWatch-Logs-subscription-shaped Record (sink.py:194-209,
+   README.md:96-132) as a one-row Arrow envelope, serializes it with
+   `record_payloads` and spools each part with `spool_write`, on the
+   executor; the driver only sums the part counts. One Python worker
+   per task, no RDD hop.
+2. `build_envelopes` + `serialize_records` — the same envelopes as pure
+   DataFrame ops (collect_list + array_sort + transform) and the same
+   payloads as a mapInArrow over them: the reference path the sink's
+   output is checked against, and a DataFrame-level view of records.
    `record_payloads` is the columnar codec: it encodes each event once,
    from the `logEvents` offsets and the id/timestamp/message child
    arrays, with json's C string encoder, into a JSON fragment; a record
@@ -16,11 +22,12 @@ Pipeline (sink.py:141-217 re-expressed Spark-first):
    Records whose compressed size exceeds 1000 KB are split into
    ⌈size/max⌉ even event-slices and re-compressed (sink.py:167-183 —
    including its 'naively hopes' even-split policy); a slice re-joins
-   fragments and never re-encodes. Every envelope→payload path (this
-   one, `spool_batch`, the `kinesyslogspool` Arrow writers) goes
-   through `record_payloads`, and every
-   spool blob→envelope path (`read_spool`, `s3_read_spool`, the
-   `kinesyslogspool` reader) through `envelope_rows`.
+   fragments and never re-encodes. Every envelope→payload path (the
+   sink kernel, `serialize_records`, the `kinesyslogspool` Arrow
+   writers) goes through `record_payloads`, and every spool
+   blob→envelope path (`read_spool`, `s3_read_spool`, the
+   `kinesyslogspool` reader) through `envelope_rows`; the readers decode
+   in `mapInArrow`, so this module never imports pandas.
 3. `spool_write` — K1 atomic publish: write temp file, hard-link to the
    final name, unlink temp (spool.py:25-36); readers never observe a
    partial record.
@@ -47,8 +54,8 @@ from collections.abc import Iterable, Iterator
 # ujson escape_forward_slashes=False parity).
 from json.encoder import encode_basestring_ascii as _json_str
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -85,6 +92,10 @@ ENVELOPE_FIELDS = (
     "logEvents",
 )
 EVENT_FIELDS = ("id", "timestamp", "message")
+# The event columns `spool_batch` reads, in EVENT_FIELDS order, and the
+# (ts_ms, id, message) order that `build_envelopes` sorts events in.
+_EVENT_COLS = ("id", "ts_ms", "message")
+_EVENT_SORT = ("ts_ms", "id", "message")
 
 SERIALIZED_SCHEMA = "logGroup string, logStream string, part int, payload binary"
 _SERIALIZED_ARROW = pa.schema([
@@ -278,30 +289,59 @@ def spool_write(payload: bytes, spool_dir: str) -> str:
     return final
 
 
+def _spool_kernel(spool_dir: str, owner: str = "000000000000",
+                  group_prefix: str = "kinesyslog", fmt: str = "syslog"):
+    """applyInArrow kernel of `spool_batch`: one (source, dest) group of
+    events -> its envelope, in `build_envelopes`' shape and event order
+    -> gzip'd record parts through `record_payloads` -> spool files.
+    Returns the group's part count as a one-row `records` table."""
+    prefix = f"{group_prefix}/{fmt}/"
+
+    def kernel(key: tuple, events: pa.Table) -> pa.Table:
+        source, dest = (k.as_py() for k in key)
+        group = None if dest is None else f"{prefix}{dest}"
+        # array_sort's order of the (timestamp, id, message) structs:
+        # field by field, a null field first.
+        order = pc.sort_indices(
+            events, sort_keys=[(c, "ascending") for c in _EVENT_SORT],
+            null_placement="at_start")
+        evs = events.take(order)
+        logs = pa.StructArray.from_arrays(
+            [evs.column(c).combine_chunks() for c in _EVENT_COLS],
+            names=EVENT_FIELDS)
+        envelope = pa.RecordBatch.from_pydict({
+            "owner": [owner], "logGroup": [group], "logStream": [source],
+            "subscriptionFilters": [[group]], "messageType": ["DATA_MESSAGE"],
+            "logEvents": pa.ListArray.from_arrays([0, len(logs)], logs),
+        }, schema=ENVELOPE_ARROW)
+        n = 0
+        for *_, blob in record_payloads([envelope]):
+            spool_write(blob, spool_dir)
+            n += 1
+        return pa.table({"records": [n]})
+
+    return kernel
+
+
 def spool_batch(events: DataFrame, spool_dir: str, **envelope_kw) -> int:
     """foreachBatch body: parsed events -> envelopes -> gzip records ->
     atomic spool files. Returns the number of records written.
 
-    The serialize/spool work runs on executors via foreachPartition —
-    the driver never holds record payloads."""
-    ser = serialize_records(build_envelopes(events, **envelope_kw))
-
-    # Count via accumulator, not a driver-side listdir: executors write to
-    # machine-local spool dirs on a real cluster (the driver can't see
-    # them), and listdir would also count pre-existing/prior-batch files.
-    # foreachPartition is an action, so accumulator updates are applied
-    # exactly once per successful task.
-    acc = events.sparkSession.sparkContext.accumulator(0)
-
-    def write_partition(rows) -> None:
-        n = 0
-        for row in rows:
-            spool_write(bytes(row["payload"]), spool_dir)
-            n += 1
-        acc.add(n)
-
-    ser.foreachPartition(write_partition)
-    return acc.value
+    One Python pass: a groupBy (source, dest) `applyInArrow` whose kernel
+    builds each group's envelope, serializes and spools it on the
+    executor, and returns its part count; the driver sums the counts and
+    never holds record payloads. The payloads equal
+    `serialize_records(build_envelopes(events, **envelope_kw))`.
+    A count is collected only from successful tasks, so a retried task
+    is counted once (a driver-side listdir could not see executor-local
+    spool dirs, and would count earlier batches' files)."""
+    counts = (
+        events.select("source", "dest", *_EVENT_COLS)
+        .groupBy("source", "dest")
+        .applyInArrow(_spool_kernel(spool_dir, **envelope_kw), "records long")
+        .collect()
+    )
+    return sum(r.records for r in counts)
 
 
 # ---------------------------------------------------------------------------
@@ -328,6 +368,12 @@ def envelope_rows(blob: bytes) -> Iterator[tuple]:
         yield tuple(rec[f] for f in ENVELOPE_FIELDS)
 
 
+def _envelope_batch(rows: Iterable[tuple]) -> pa.RecordBatch:
+    """Envelope tuples (ENVELOPE_FIELDS order) -> one ENVELOPE_ARROW batch."""
+    return pa.RecordBatch.from_pylist(
+        [dict(zip(ENVELOPE_FIELDS, r)) for r in rows], schema=ENVELOPE_ARROW)
+
+
 def read_spool(spark, spool_dir: str) -> DataFrame:
     """Spool files -> envelope DataFrame (the engine's own output format
     round-trips through its reader).
@@ -347,12 +393,12 @@ def read_spool(spark, spool_dir: str) -> DataFrame:
         os.path.join(spool_dir, f"{SPOOL_PREFIX}*")
     )
 
-    def decode(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            rows = [r for c in pdf["content"] for r in envelope_rows(bytes(c))]
-            yield pd.DataFrame(rows, columns=ENVELOPE_FIELDS)
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _envelope_batch(
+                r for c in batch.column("content").to_pylist() for r in envelope_rows(c))
 
-    return raw.select("content").mapInPandas(decode, schema=ENVELOPE_SCHEMA)
+    return raw.select("content").mapInArrow(decode, schema=ENVELOPE_SCHEMA)
 
 
 def s3_read_spool(
@@ -374,7 +420,7 @@ def s3_read_spool(
     what ships to executors: each Python worker builds its own
     connection, the standard pattern for non-picklable clients. The
     listing is driver-side but O(keys) METADATA only — the blobs
-    themselves are fetched in parallel by `mapInPandas` over the
+    themselves are fetched in parallel by `mapInArrow` over the
     key table, one task per key batch.
 
     Reference parity: utils/kinesis-s3-dump.py:41-49 (bucket listing +
@@ -405,16 +451,14 @@ def s3_read_spool(
     par = max(1, min(len(keys), spark.sparkContext.defaultParallelism))
     kdf = spark.createDataFrame([(k,) for k in keys], "key string").repartition(par)
 
-    def fetch(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         c = client_factory()  # one client per Python worker
-        for pdf in pdfs:
-            rows = [
-                r for k in pdf["key"]
-                for r in envelope_rows(c.get_object(Bucket=bucket, Key=k)["Body"].read())
-            ]
-            yield pd.DataFrame(rows, columns=ENVELOPE_FIELDS)
+        for batch in batches:
+            yield _envelope_batch(
+                r for k in batch.column("key").to_pylist()
+                for r in envelope_rows(c.get_object(Bucket=bucket, Key=k)["Body"].read()))
 
-    return kdf.mapInPandas(fetch, schema=ENVELOPE_SCHEMA)
+    return kdf.mapInArrow(fetch, schema=ENVELOPE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -3,7 +3,7 @@ first-class `spark.read.format(...)` source).
 
 The engine's sink writes gzip-9 JSON record files (reference
 `spool.py:25-36` naming + atomic link); `sinks/records.py:read_spool`
-reads them back via binaryFile + mapInPandas. This module registers the
+reads them back via binaryFile + mapInArrow. This module registers the
 same decode as a NATIVE Spark data source using the pyspark 4 Python
 Data Source API (`pyspark.sql.datasource`), so the format composes with
 the full reader surface:

@@ -7,6 +7,8 @@ import gzip
 import json
 import os
 import random
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -128,8 +130,8 @@ def test_pack_upload_batches():
 
 
 def test_spool_batch_count_ignores_preexisting_files(spark, tmp_path):
-    """The return value counts records WRITTEN THIS BATCH (via an
-    accumulator), not whatever os.listdir sees — pre-existing and
+    """The return value counts records WRITTEN THIS BATCH (the part
+    counts its tasks return), not whatever os.listdir sees — pre-existing and
     prior-batch spool files must not inflate it."""
     spool_dir = str(tmp_path / "spool2")
     events = _events(spark)
@@ -177,3 +179,52 @@ def test_serialize_plan_has_one_exchange(spark):
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert "Sort [" not in plan, plan
     assert "MapInArrow" in plan, plan
+
+
+def _spool_bytes(spool_dir: str) -> list[bytes]:
+    return sorted(
+        gzip.decompress(open(os.path.join(spool_dir, f), "rb").read())
+        for f in os.listdir(spool_dir)
+    )
+
+
+def test_spool_batch_matches_reference_path(spark, tmp_path):
+    """The sink kernel writes, decompressed, exactly the payloads of
+    serialize_records(build_envelopes(...)): several groups (one with a
+    null dest), equal timestamps ordered by id then message (a null
+    message first), an oversize group that splits, input columns in
+    another order with an extra one, and non-default envelope fields."""
+    rng = random.Random(7)
+    rows = [
+        (f"id-{i % 3}", 1700000000000 + i // 4, f"m{i % 2}", "10.0.0.1", 514)
+        for i in range(24)
+    ]
+    rows += [("id-0", 1700000000000, None, "10.0.0.1", 514),
+             ("b", 5, "x", "10.0.0.2", 514), ("a", 5, "y", "10.0.0.2", 514),
+             ("c", 1, "z", "10.0.0.1", 6514), ("d", 2, "w", "10.0.0.3", None)]
+    rows += [(f"{i:06d}", 1700000000000 - i, rng.randbytes(1024).hex(), "10.0.0.9", 514)
+             for i in range(2000)]
+    rng.shuffle(rows)
+    events = spark.createDataFrame(
+        rows, "id string, ts_ms long, message string, source string, dest int"
+    ).select("message", "dest", F.lit(1).alias("extra"), "ts_ms", "source", "id")
+    kw = {"owner": "123456789012", "group_prefix": "relay", "fmt": "gelf"}
+    ref = sorted(
+        gzip.decompress(bytes(r.payload))
+        for r in serialize_records(build_envelopes(events, **kw)).collect()
+    )
+    spool_dir = str(tmp_path / "kernel")
+    n = spool_batch(events, spool_dir, **kw)
+    got = _spool_bytes(spool_dir)
+    assert n == len(got) == len(ref) >= 7
+    assert got == ref
+    assert sum(json.loads(g)["logStream"] == "10.0.0.9" for g in got) >= 2
+
+
+def test_records_module_does_not_import_pandas():
+    """Importing the record module (what every sink worker does) loads
+    no pandas: the readers decode through mapInArrow."""
+    code = ("import sys, kinesyslog_spark.sinks.records; "
+            "sys.exit('pandas' in sys.modules)")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert subprocess.run([sys.executable, "-c", code], cwd=root).returncode == 0

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 
 import pandas as pd
@@ -451,6 +452,55 @@ def test_relay_trigger_runs_no_listing_job(spark, tmp_path):
              if tracker.getStageInfo(s)]
     assert tasks, "the query's jobs are not visible under its runId"
     assert max(tasks) < files, tasks
+
+
+_PYTHON_NODE = re.compile(r"^\W*(\w*(?:EvalPython|InPandas|InArrow)\w*) \(\d+\)")
+
+
+def _final_plan_tree(plan: str) -> str:
+    """The executed tree of a formatted plan: AQE's final plan if any."""
+    if "== Final Plan ==" in plan:
+        plan = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    return plan.split("\n\n", 1)[0]
+
+
+def test_relay_sink_runs_one_python_node(spark, tmp_path):
+    """Every job of the relay query runs under a SQL plan that holds
+    exactly one Python node, the sink's groupBy applyInArrow: no RDD hop (a foreachPartition job runs outside any Dataset plan,
+    so it lands in the micro-batch's own Python-free execution) and no
+    second Python pass."""
+    from kinesyslog_spark.sources.bridge import ROLL_COUNT, SpoolWriter
+
+    in_dir, spool_dir, ckpt = (str(tmp_path / d) for d in ("in", "spool", "ckpt"))
+    writer = SpoolWriter(in_dir)
+    for i in range(4 * ROLL_COUNT):
+        writer.add(f"<13>1 2024-01-01T00:00:01.000000+00:00 h app - - - seq={i}",
+                   f"10.0.0.{i % 3}", 514)
+    q = start_relay(spark, in_dir, spool_dir, ckpt, trigger_seconds=1)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(os.listdir(spool_dir)) == 3
+    jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert jobs, "the query's jobs are not visible under its runId"
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList(max(0, store.executionsCount() - 50), 50).iterator()
+    plans, seen = [], set()
+    while execs.hasNext():
+        e = execs.next()
+        keys = e.jobs().keysIterator()
+        ran = set()
+        while keys.hasNext():
+            ran.add(int(keys.next()))
+        if ran & jobs:
+            seen |= ran & jobs
+            plans.append(_final_plan_tree(e.physicalPlanDescription()))
+    assert seen == jobs, (jobs, seen)
+    for plan in plans:
+        nodes = [m.group(1) for line in plan.splitlines()
+                 if (m := _PYTHON_NODE.match(line))]
+        assert nodes == ["FlatMapGroupsInArrow"], plan
 
 
 def test_session_window_reassembly_batch_parity(spark):
